@@ -5,8 +5,9 @@ The CSV files themselves are NOT vendored into this repo — they are
 public UCI/CDIAC data distributed with the reference; set
 ``SPARK_GRAFT_DATASETS_DIR`` (default ``/root/reference/datasets``) to a
 directory containing ``fossil_fuels.csv`` / ``wine.csv`` / ``iris.csv``.
-Raises FileNotFoundError with a pointer when the directory is absent so
-callers (and the doctest replay suite) can skip cleanly.
+Raises :class:`DatasetNotFound` (a FileNotFoundError) with a pointer
+when the CSV is absent, so callers (and the doctest replay suite) can
+skip cleanly.
 
 Frames are cached per (name, session) like the reference's
 :persistent_term cache (datasets.ex:60-75) — these are driver-side demo
@@ -25,11 +26,15 @@ _DEFAULT_DIR = "/root/reference/datasets"
 _CACHE: dict = {}
 
 
+class DatasetNotFound(FileNotFoundError):
+    """A demo dataset's CSV is not in the datasets directory."""
+
+
 def _read(name: str, spark=None):
     base = os.environ.get(_DIR_ENV, _DEFAULT_DIR)
     path = os.path.join(base, f"{name}.csv")
     if not os.path.exists(path):
-        raise FileNotFoundError(
+        raise DatasetNotFound(
             f"dataset csv not found: {path} — set ${_DIR_ENV} to a directory "
             "with the reference's datasets/*.csv"
         )

@@ -70,12 +70,6 @@ def is_float(dtype) -> bool:
     return isinstance(dtype, tuple) and dtype[0] == "f"
 
 
-def is_temporal(dtype) -> bool:
-    if dtype in ("date", "time"):
-        return True
-    return isinstance(dtype, tuple) and dtype[0] in ("naive_datetime", "datetime", "duration")
-
-
 def time_to_ns(t) -> int:
     """datetime.time -> the engine's physical :time rendering
     (nanoseconds since midnight). The single definition every literal

@@ -5,28 +5,29 @@ Scale design (the point of running this on Spark at all):
 
 - **Exact**: hash-partition on ``md5(text)`` — one shuffle, combiner-side
   reduction; never compares full texts across the cluster.
-- **MinHash + LSH**: signature is computed scan-side with built-in
-  functions (no UDF); banding turns the quadratic near-dup problem into
-  an equi-join on (band_id, band_hash) — candidates shuffle only within
-  buckets, exactly the published shingle→minhash→band→bucket-join
-  pipeline.
-- **SimHash**: explode(words) + 16 conditional sums — a single groupBy,
+- **MinHash + LSH**: word shingles come from a map-only Arrow
+  ``mapInPandas`` tokenizer; each shingle is hashed once with built-in
+  functions and reduced by k codegen'd min aggregates. Banding turns the
+  quadratic near-dup problem into an equi-join on (band_id, band_hash) —
+  candidates shuffle only within buckets, exactly the published
+  shingle→minhash→band→bucket-join pipeline. Two signature faces share
+  one hash family: :func:`minhash_signatures` (batch) and
+  :func:`minhash_signature_struct_sql` (one SQL expression, for streams).
+- **SimHash**: explode(words) + packed per-bit sums — a single groupBy,
   map-side combined.
 - **Jaccard verify**: computed only on LSH/block candidates via
   array_intersect/union sizes.
 - **Embedding near-dup**: blocked on a coarse key (label / IVF cell) so
   the pair join is per-block, not global cross.
 
-Hashes are md5-hex based (lexicographic min) so DuckDB oracles reproduce
-results exactly.
-"""
+Hashes derive from md5 hex prefixes so DuckDB oracles reproduce results
+exactly."""
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame as SDF, Window as W, functions as F
 
-from .text import shingle_set, words
+from .text import words
 
 # Edge sets at or below this resolve to connected components with a
 # driver-side union-find (one collect, one pass) instead of O(diameter)
@@ -51,31 +52,6 @@ def exact_dedup(sdf: SDF, text_col: str = "text", key_col: str = "doc_id") -> SD
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(text: Column, num_hashes: int = 8, shingle_n: int = 3) -> list[Column]:
-    """k MinHash values as pure column expressions: for seed i, min over
-    shingles of md5(i || ':' || s).
-
-    Lexicographic min of md5 hex == min of the 128-bit integer — a valid
-    hash-family member, and reproducible in any engine with md5.
-
-    NOTE: higher-order functions (transform/array_min) run interpreted,
-    not codegen'd — fine for ad-hoc use; the bulk pipeline path is
-    ``with_minhash`` below, which lowers to explode + codegen'd min aggs.
-    """
-    shingles = shingle_set(text, shingle_n)
-
-    def seeded(seed: int):
-        # NB: must be a 1-arg lambda — F.transform calls 2-arg functions
-        # with (element, index), which would shadow the seed
-        return lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s))
-
-    out = []
-    for i in range(num_hashes):
-        hashed = F.transform(shingles, seeded(i))
-        out.append(F.when(F.size(shingles) > 0, F.array_min(hashed)).otherwise(F.md5(text)))
-    return out
-
-
 # universal-hash family parameters: h_i = (A[i] * h32 + B[i]) mod P32,
 # where h32 = (first 15 md5 hex chars as int) mod P32. One md5 per
 # shingle total — the standard published MinHash construction.
@@ -90,57 +66,6 @@ def _base_hash32(s: Column) -> Column:
     return h % MINHASH_P32
 
 
-def with_minhash(
-    sdf: SDF,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    shingle_n: int = 3,
-    prefix: str = "mh",
-    key_col: str = "doc_id",
-    lowercase: bool = False,
-) -> SDF:
-    """Append mh0..mh{k-1} numeric signature columns.
-
-    Plan shape: explode(shingles) -> ONE md5 per shingle -> k universal
-    hashes ``(A[i]*h + B[i]) mod P`` -> groupBy(key) with k codegen'd min
-    aggregates (map-side combined) -> join back. Scales with ordinary
-    shuffle mechanics; the signature table is tiny.
-
-    ``lowercase`` case-folds the text (Spark ``lower``) before shingling
-    AND before the empty-shingle fallback hash — the knob that makes the
-    census's ``normalize="ws_case"`` mode EXACT (case-drifted replicas
-    then share signatures, so collapsing them before banding preserves
-    components). Every signature face (this, minhash_signatures, the
-    stateless stream kernel) folds through the same Spark expression, so
-    signatures stay bit-identical across faces.
-    """
-    from .text import shingle_rows
-
-    src = sdf
-    fold_col = text_col
-    if lowercase:
-        fold_col = "__t_fold__"
-        src = sdf.withColumn(fold_col, F.lower(F.col(text_col)))
-    sh = shingle_rows(src, key_col, fold_col, shingle_n).withColumnRenamed("shingle", "__s__")
-    sh = sh.withColumn("__h__", _base_hash32(F.col("__s__")))
-    aggs = [
-        F.min((F.lit(MINHASH_A[i]) * F.col("__h__") + F.lit(MINHASH_B[i])) % MINHASH_P32).alias(f"{prefix}{i}")
-        for i in range(num_hashes)
-    ]
-    sig = sh.groupBy(key_col).agg(*aggs)
-    # empty-shingle docs hash the raw text through the same family
-    fb = _base_hash32(F.lower(F.col(text_col)) if lowercase else F.col(text_col))
-    joined = sdf.join(sig, key_col, "left")
-    return joined.withColumns(
-        {
-            f"{prefix}{i}": F.coalesce(
-                F.col(f"{prefix}{i}"), (F.lit(MINHASH_A[i]) * fb + F.lit(MINHASH_B[i])) % MINHASH_P32
-            )
-            for i in range(num_hashes)
-        }
-    )
-
-
 def minhash_signatures(
     sdf: SDF,
     text_col: str = "text",
@@ -150,16 +75,19 @@ def minhash_signatures(
     key_col: str = "doc_id",
     lowercase: bool = False,
 ) -> SDF:
-    """NARROW signature kernel: (key, mh0..mh{k-1}) only — bit-identical
-    to ``with_minhash`` (same hash family, shingles, empty-shingle
-    fallback) but shaped for pipelines whose next stage needs only the
-    signature (LSH banding, the signature store). ``with_minhash``
-    decorates the ORIGINAL frame, which drags the full text column
-    through a sort-merge exchange (measured 26 s of a 30 s store build
-    at a 64x corpus); here grams come from the map-only Arrow kernel,
-    the groupBy exchanges only map-side-combined partial mins, and the
-    fallback hash projects in the same corpus scan — the only shuffled
-    bytes are (key, k longs)."""
+    """NARROW signature kernel: (key, mh0..mh{k-1}) only, shaped for
+    pipelines whose next stage needs only the signature (LSH banding,
+    the signature store). Grams come from the map-only Arrow kernel, the
+    groupBy exchanges only map-side-combined partial mins, and the
+    raw-text fallback hash (docs with fewer than ``shingle_n`` words)
+    projects in the same corpus scan — the only shuffled bytes are
+    (key, k longs). NULL text gets all-NULL signatures.
+
+    ``lowercase`` case-folds the text (Spark ``lower``) before shingling
+    AND before the fallback hash — the knob that makes the census's
+    ``normalize="ws_case"`` mode EXACT (case-drifted replicas then share
+    signatures, so collapsing them before banding preserves
+    components)."""
     from .text import shingle_rows_arrow
 
     # case-fold BEFORE the Arrow kernel so Spark's lower (not Python's
@@ -213,19 +141,15 @@ def candidate_shingle_sets(
     the heavy shingle payload is tokenized/aggregated only for the docs
     that actually verify.
 
-    r12: replaces the r11 ``minhash_signatures_with_shingles`` merged
-    aggregate, which localCheckpointed ``collect_set(shingle)`` for the
-    WHOLE corpus (~6x corpus bytes in the block manager — the §5 caching
-    trap; driver measured q_dedup_keep_best 9.76 s at 32 cores vs 3.81
-    pre-merge, and 3.83 at 8 cores: the wide materialization degraded
-    with parallelism). Here the corpus is re-scanned once with a
-    BROADCAST semi-join on the candidate ids (map-side filter, no corpus
-    shuffle — candidate ids after the exact-text census are a small
-    fraction of the corpus by construction), and only the surviving docs
-    pay the tokenize + ``collect_set`` cost. Shingle sets are
-    bit-identical to the merged form (same Arrow kernel, same fold);
-    docs with < ``shingle_n`` words still produce no row (the verify
-    joins stay inner — unchanged discipline)."""
+    The corpus is re-scanned once with a BROADCAST semi-join on the
+    candidate ids (map-side filter, no corpus shuffle — candidate ids
+    after the exact-text census are a small fraction of the corpus by
+    construction), and only the surviving docs pay the tokenize +
+    ``collect_set`` cost. A whole-corpus ``collect_set`` pinned next to
+    the signatures (the r11 form) held ~6x corpus bytes in the block
+    manager and degraded with cores (driver: q_dedup_keep_best 9.76 s at
+    32 cores vs 3.83 at 8). Docs with < ``shingle_n`` words produce no
+    row (the verify joins stay inner)."""
     from .text import shingle_rows_arrow
 
     ids = F.broadcast(cand_ids.select(key_col))
@@ -238,81 +162,6 @@ def candidate_shingle_sets(
         .groupBy(key_col)
         .agg(F.collect_set("shingle").alias(shingle_col))
     )
-
-
-def minhash_signatures_with_shingles(
-    sdf: SDF,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    shingle_n: int = 3,
-    prefix: str = "mh",
-    key_col: str = "doc_id",
-    lowercase: bool = False,
-    shingle_col: str = "sh",
-    pin: bool = True,
-) -> tuple[SDF, SDF]:
-    """ONE exploded shingle pass yielding BOTH the narrow signature
-    table (bit-identical to :func:`minhash_signatures` — same hash
-    family, same empty-shingle fallback) AND the per-key distinct
-    shingle set the Jaccard verify needs.
-
-    The verify pipelines (q_dedup_clusters / q_dedup_keep_best /
-    q_dedup_ngram_jaccard) used to run TWO full shingle passes over the
-    corpus — the Arrow kernel for signatures plus a posexplode+window
-    pass feeding ``collect_set`` — and the banding self-join + two-sided
-    verify join then quadrupled those subtrees in the physical plan
-    (measured: 4 MapInPandas nodes / 40 parquet scans / 48 exchanges in
-    one sf0.1 pairs plan). Here the single exploded pass feeds one
-    groupBy computing the k signature mins AND ``collect_set(shingle)``
-    together (guide §2.4: operations keyed the same way share one
-    exchange), and ``pin`` localCheckpoints the aggregate so its 3-4
-    consumers read the materialized result instead of re-running
-    scan+explode+agg per plan branch. At scale that is the difference
-    between one corpus tokenization and four.
-
-    Returns ``(sig, shingles)``: ``sig`` = (key, mh0..mh{k-1}) for every
-    corpus row (fallback-hashed when the doc has < shingle_n words);
-    ``shingles`` = (key, shingle_col) ONLY for docs with >= shingle_n
-    words (same inner-join discipline as the two-pass form: short docs
-    never verify). With ``lowercase`` the shingle set holds the folded
-    shingles (the signature and the verify must see the same tokens).
-    """
-    from .text import shingle_rows_arrow
-
-    narrow_src = sdf.select(
-        key_col,
-        (F.lower(F.col(text_col)) if lowercase else F.col(text_col)).alias(text_col),
-    )
-    mins = [
-        F.min((F.lit(MINHASH_A[i]) * F.col("__h__") + F.lit(MINHASH_B[i])) % MINHASH_P32).alias(
-            f"{prefix}{i}"
-        )
-        for i in range(num_hashes)
-    ]
-    g = (
-        shingle_rows_arrow(narrow_src, key_col, text_col, shingle_n)
-        .withColumn("__h__", _base_hash32(F.col("shingle")))
-        .groupBy(key_col)
-        .agg(*mins, F.collect_set("shingle").alias(shingle_col))
-    )
-    if pin:
-        g = g.localCheckpoint(eager=False)
-    fbh = _base_hash32(F.lower(F.col(text_col)) if lowercase else F.col(text_col))
-    narrow = sdf.select(
-        F.col(key_col),
-        *[
-            ((F.lit(MINHASH_A[i]) * fbh + F.lit(MINHASH_B[i])) % MINHASH_P32).alias(f"__fb{i}__")
-            for i in range(num_hashes)
-        ],
-    )
-    sig = narrow.join(g.select(key_col, *[f"{prefix}{i}" for i in range(num_hashes)]), key_col, "left").select(
-        key_col,
-        *[
-            F.coalesce(F.col(f"{prefix}{i}"), F.col(f"__fb{i}__")).alias(f"{prefix}{i}")
-            for i in range(num_hashes)
-        ],
-    )
-    return sig, g.select(key_col, shingle_col)
 
 
 def lsh_buckets(
@@ -447,17 +296,8 @@ def exact_text_census(
     return rep_ids, star
 
 
-def lsh_candidate_pairs(buckets: SDF, key_col: str = "doc_id", pin: bool = False) -> SDF:
-    """Self-join bucket lists into candidate pairs (a < b), distinct.
-
-    ``pin`` localCheckpoints the bucket table before the self-join: the
-    two join branches otherwise each re-run the whole signature pipeline
-    feeding ``buckets`` (Catalyst plans the branches as independent
-    subtrees; exchange reuse only sometimes collapses them under AQE).
-    The bucket table is (key, band, bucket) — narrow — so pinning it is
-    cheap at any corpus size."""
-    if pin:
-        buckets = buckets.localCheckpoint(eager=False)
+def lsh_candidate_pairs(buckets: SDF, key_col: str = "doc_id") -> SDF:
+    """Self-join bucket lists into candidate pairs (a < b), distinct."""
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -530,61 +370,8 @@ def lsh_candidate_pairs_with_sets(
 
 
 # ---------------------------------------------------------------------------
-# n-gram Jaccard
-# ---------------------------------------------------------------------------
-
-
-def jaccard(a: Column, b: Column) -> Column:
-    """Jaccard similarity of two array<string> sets."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
-
-
-def ngram_jaccard_pairs(
-    sdf: SDF,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    block_col: str | None = None,
-    shingle_n: int = 3,
-    threshold: float = 0.0,
-) -> SDF:
-    """All pairs within a block with shingle-set Jaccard >= threshold.
-
-    ``block_col`` bounds the join (lang, LSH bucket, source, ...) — at
-    scale never run this unblocked.
-    """
-    base = sdf.select(
-        F.col(key_col),
-        *([F.col(block_col)] if block_col else []),
-        shingle_set(F.col(text_col), shingle_n).alias("__sh__"),
-    )
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col(f"a.{key_col}") < F.col(f"b.{key_col}")
-    if block_col:
-        cond = (F.col(f"a.{block_col}") == F.col(f"b.{block_col}")) & cond
-    sim = jaccard(F.col("a.__sh__"), F.col("b.__sh__"))
-    out = (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{key_col}").alias("id_a"),
-            F.col(f"b.{key_col}").alias("id_b"),
-            F.round(sim, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out
-
-
-# ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-
-
-def _hex_nibble(c: Column) -> Column:
-    """hex char -> 0..15 via ascii arithmetic (portable to any SQL engine)."""
-    a = F.ascii(c)
-    return F.when(a <= 57, a - 48).otherwise(a - 87)
 
 
 def simhash_bits(
@@ -603,8 +390,8 @@ def simhash_bits(
     hashes parse as two 32-bit conv() halves recombined with
     shiftleft|or; the sign bit assembles as −2^63 (two's complement), so
     the signature is the signed-64 reinterpretation of the big-endian
-    md5 prefix — identical to ``int.from_bytes(md5[:8], "big")`` in
-    :func:`simhash64_pandas` and to the oracle's nibble arithmetic.
+    md5 prefix — identical to ``int.from_bytes(md5[:8], "big")`` and to
+    the oracle's nibble arithmetic.
     """
     if bits % 4 != 0 or not 4 <= bits <= 64:
         raise ValueError(f"bits must be a multiple of 4 in [4, 64], got {bits}")
@@ -661,80 +448,6 @@ def simhash_bits(
         term = F.when(s_j * 2 > F.col("__n__"), F.lit(weight)).otherwise(0)
         sig = term if sig is None else sig + term
     return sums.select(F.col(key_col), sig.cast("long").alias("simhash"))
-
-
-def simhash16(sdf: SDF, text_col: str = "text", key_col: str = "doc_id") -> SDF:
-    """16-bit SimHash (see :func:`simhash_bits`)."""
-    return simhash_bits(sdf, 16, text_col, key_col)
-
-
-def simhash64_pandas(sdf: SDF, text_col: str = "text", key_col: str = "doc_id") -> SDF:
-    """64-bit SimHash via an Arrow-batched pandas UDF (the production-width
-    variant; result identical to ``simhash_bits(bits=64)``, which is the
-    oracle-expressible twin).
-
-    Vectorized kernel: per batch, all word hashes unpack to ONE bit
-    matrix (np.unpackbits on the md5[:8] prefixes) and per-doc ±1 sums
-    reduce with np.add.reduceat over document boundaries — no per-word
-    or per-bit Python loop (the md5 calls remain per-word; hashlib has
-    no batch API)."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    def _kernel(texts: pd.Series) -> pd.Series:
-        import hashlib
-        import re
-
-        def _ascii_strip(t: str) -> str:
-            # the Java \s ASCII whitespace class from both ends — the
-            # python twin of text.wtrim (str.strip() would also strip
-            # unicode whitespace, which Java \s does not match)
-            return t.strip(" \t\n\x0b\x0c\r")
-
-        words_per_doc = []
-        digests = []
-        for t in texts:
-            # EXACT Spark tokenization — split(wtrim(lower(t)), '\s+'):
-            # wtrim strips ALL boundary whitespace (text.wtrim — plain
-            # Spark trim strips only spaces), Java \s is the ASCII class
-            # [ \t\n\x0b\f\r] (never unicode NBSP etc.), and Spark split
-            # keeps interior empties only after wtrim — empty text is
-            # [''], one empty token, exactly like simhash_bits. A bare
-            # str.split() still diverges (unicode whitespace).
-            ws = re.split(r"[ \t\n\x0b\f\r]+", _ascii_strip((t or "").lower()))
-            words_per_doc.append(len(ws))
-            for w in ws:
-                digests.append(hashlib.md5(w.encode()).digest()[:8])
-        n_docs = len(words_per_doc)
-        counts = np.asarray(words_per_doc, dtype="int64")
-        if not digests:
-            return pd.Series(np.zeros(n_docs, dtype="int64"))
-        # bytes -> (n_words, 64) bit matrix; unpackbits is MSB-first per
-        # byte, so byte-reverse then flip gives bit j of the big-endian
-        # 64-bit integer at column j (matching (h >> j) & 1)
-        raw = np.frombuffer(b"".join(digests), dtype="uint8").reshape(-1, 8)
-        bits = np.unpackbits(raw[:, ::-1], axis=1, bitorder="little")  # col j = bit j
-        # per-doc bit sums over word ranges. reduceat over ONLY the
-        # non-empty docs' starts (consecutive non-empty starts are
-        # strictly increasing and in-range); empty docs scatter back as
-        # zero rows — clamping empty starts instead would split the
-        # preceding doc's segment and corrupt its sums.
-        starts = np.zeros(len(counts), dtype="int64")
-        np.cumsum(counts[:-1], out=starts[1:])
-        nonempty = counts > 0
-        seg = np.zeros((n_docs, 64), dtype="int64")
-        seg[nonempty] = np.add.reduceat(bits.astype("int64"), starts[nonempty], axis=0)
-        # bit j set iff 2*Σbit_j > n_words  (Σ(±1) > 0)
-        set_bits = (2 * seg) > counts[:, None]
-        weights = np.full(64, 0, dtype="int64")
-        for j in range(63):
-            weights[j] = 1 << j
-        weights[63] = -(1 << 63)  # two's-complement sign bit
-        sigs = (set_bits.astype("int64") * weights).sum(axis=1)
-        return pd.Series(sigs, dtype="int64")
-
-    _simhash = F.pandas_udf(_kernel, T.LongType())
-    return sdf.select(F.col(key_col), _simhash(F.col(text_col)).alias("simhash64"))
 
 
 def hamming_candidates(
@@ -905,100 +618,23 @@ def dedup_representatives(docs: SDF, components: SDF, key_col: str = "doc_id") -
     return joined.filter(keep).drop("component")
 
 
-def minhash_signature_cols(
-    text: Column, num_hashes: int = 8, shingle_n: int = 3, lowercase: bool = False
-) -> list[Column]:
-    """STATELESS per-row rendering of ``with_minhash``'s exact universal
-    hash family — same base ``md5 -> P32`` hash, same A/B parameters,
-    same space-joined word shingles, same raw-text fallback for docs
-    with fewer than ``shingle_n`` words — so signatures agree
-    bit-for-bit with the bulk kernel (pinned by test_llm_ops).
-
-    Prefer ``minhash_signature_struct`` when selecting all hashes: it
-    evaluates the shingle array ONCE per row. This per-hash column form
-    keeps the one-transform-one-array_min body per column — extracting
-    a struct field per column would re-run the whole k-hash fold per
-    column (Catalyst does not CSE interpreted higher-order
-    subexpressions), k times the work of this form for a single
-    column."""
-    from .text import shingle_set
-
-    if lowercase:
-        text = F.lower(text)
-    sh = shingle_set(text, shingle_n)
-    base = F.transform(sh, lambda s: _base_hash32(s))
-    fb = _base_hash32(text)
-
-    def seeded(i: int):
-        # 1-arg lambda: F.transform passes (element, index) to 2-arg
-        # functions, which would shadow the captured seed
-        return lambda h: (F.lit(MINHASH_A[i]) * h + F.lit(MINHASH_B[i])) % MINHASH_P32
-
-    out = []
-    for i in range(num_hashes):
-        hashed = F.transform(base, seeded(i))
-        out.append(
-            F.when(F.size(sh) > 0, F.array_min(hashed)).otherwise(
-                (F.lit(MINHASH_A[i]) * fb + F.lit(MINHASH_B[i])) % MINHASH_P32
-            )
-        )
-    return out
-
-
-def minhash_signature_struct(
-    text: Column, num_hashes: int = 8, shingle_n: int = 3, lowercase: bool = False
-) -> Column:
-    """All ``num_hashes`` MinHash components as ONE struct column
-    (fields m0..m{k-1}) computed in a single array pass: base-hash the
-    shingle set once, then fold it with an F.aggregate whose struct
-    accumulator carries every seeded min — one traversal with k
-    multiply-mod-min ops per element, vs the per-column form's k
-    transforms + k array_mins (all interpreted; the one-pass fold cut
-    the stream face's micro-batch from ~4.6 s to the batch face's
-    level). Select the struct FIRST, then project its fields in a
-    second select, so the fold runs once per row."""
-    from .text import shingle_set
-
-    if lowercase:
-        text = F.lower(text)
-    sh = shingle_set(text, shingle_n)
-    base = F.transform(sh, lambda s: _base_hash32(s))
-    fb = _base_hash32(text)
-    names = [f"m{i}" for i in range(num_hashes)]
-    # any (A*h+B) % P32 is < P32, so P32 is the fold identity
-    init = F.struct(*[F.lit(MINHASH_P32).cast("long").alias(n) for n in names])
-
-    def fold(acc, h):
-        return F.struct(
-            *[
-                F.least(
-                    acc[names[i]],
-                    (F.lit(MINHASH_A[i]) * h + F.lit(MINHASH_B[i])) % MINHASH_P32,
-                ).alias(names[i])
-                for i in range(num_hashes)
-            ]
-        )
-
-    mins = F.aggregate(base, init, fold)
-    fallback = F.struct(
-        *[
-            ((F.lit(MINHASH_A[i]) * fb + F.lit(MINHASH_B[i])) % MINHASH_P32).alias(names[i])
-            for i in range(num_hashes)
-        ]
-    )
-    return F.when(F.size(sh) > 0, mins).otherwise(fallback)
-
-
 def minhash_signature_struct_sql(
     text_col: str, num_hashes: int = 8, shingle_n: int = 3, lowercase: bool = False
 ) -> Column:
-    """``minhash_signature_struct`` rendered as ONE SQL expression
-    string (F.expr): bit-identical Catalyst tree, but a single py4j
-    call to build — the lambda-based Column construction costs ~1 s of
-    driver-side py4j round trips per call (measured), which the
-    streaming face pays on every query start. Takes the column NAME
-    (SQL can't splice an arbitrary Column); expression-valued callers
-    use the Column form."""
+    """The STATELESS per-row MinHash face: all ``num_hashes`` components
+    as ONE struct column (fields m0..m{k-1}), equal to
+    :func:`minhash_signatures` (same hash family, shingles, fallback and
+    fold). It needs no aggregate, so it runs inside a stream (the
+    signature store's stream probe). The distinct shingle array is
+    base-hashed once and folded by one ``aggregate`` whose struct
+    accumulator carries every seeded min.
+
+    Built as one SQL expression string: a single py4j call, where the
+    lambda-based Column construction cost ~1 s of driver-side py4j
+    round trips per call (measured), paid on every stream start. Takes
+    the column NAME (SQL can't splice an arbitrary Column). Select the
+    struct FIRST, then project its fields in a second select, so the
+    fold runs once per row."""
     p = MINHASH_P32
     col = f"lower(`{text_col}`)" if lowercase else f"`{text_col}`"
 

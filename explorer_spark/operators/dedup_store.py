@@ -14,12 +14,13 @@ Layout (plain parquet, readable by any engine):
     <path>/buckets/     key, band, bucket      (the LSH join side,
                                                 partitioned by band)
 
-Join-time plan shape: new-shard signatures compute locally (explode ->
-one md5 per shingle -> k codegen min-aggs, dedup.with_minhash), band
-buckets equi-join the store's ``buckets/`` on (band, bucket) — never a
-cross join — and verification reads only the store's ``signatures/``
-(estimated Jaccard = fraction of equal MinHash components, the
-standard unbiased estimator), so the corpus text stays cold. Buckets
+Join-time plan shape: new-shard signatures compute locally (Arrow
+grams -> one md5 per shingle -> k codegen min-aggs,
+dedup.minhash_signatures), band buckets equi-join the store's
+``buckets/`` on (band, bucket) — never a cross join — and verification
+reads only the store's ``signatures/`` (estimated Jaccard = fraction of
+equal MinHash components, the standard unbiased estimator), so the
+corpus text stays cold. Buckets
 are partitioned by ``band`` so a band-restricted probe prunes files at
 the scan.
 
@@ -35,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SDF
 from pyspark.sql import functions as F
 
-from .dedup import lsh_buckets, with_minhash
+from .dedup import lsh_buckets, minhash_signatures, minhash_signature_struct_sql
 
 META_VERSION = 1
 
@@ -57,12 +58,11 @@ def write_signature_store(
     rows to an existing store (parameters must match — validated
     against meta); ``"overwrite"`` (re)creates the store.
 
-    The signature computation is bit-identical to dedup.with_minhash
-    (same hash family, shingles, and empty-shingle fallback) but
-    store-shaped: map-only Arrow grams + one map-side-combined min-agg
-    exchange of (key, 8 longs) — the corpus TEXT never enters a
-    shuffle. Both tables write through ordinary distributed parquet
-    writers — nothing funnels through the driver."""
+    Signatures come from dedup.minhash_signatures: map-only Arrow
+    grams + one map-side-combined min-agg exchange of (key, k longs) —
+    the corpus TEXT never enters a shuffle. Both tables write through
+    ordinary distributed parquet writers — nothing funnels through the
+    driver."""
     if num_hashes % bands != 0:
         raise ValueError(f"num_hashes ({num_hashes}) must divide into bands ({bands})")
     spark = sdf.sparkSession
@@ -77,10 +77,6 @@ def write_signature_store(
                 f"would silently break candidate recall — recreate the store "
                 f"or match its parameters"
             )
-    # narrow kernel (dedup.minhash_signatures): the corpus TEXT never
-    # enters a shuffle — the only exchanged bytes are (key, k longs)
-    from .dedup import minhash_signatures
-
     sig = minhash_signatures(
         sdf,
         text_col=text_col,
@@ -159,12 +155,12 @@ def dedup_against_store(
     the store side is parquet SCAN + one equi-join on (band, bucket)
     plus one equi-join on key for the verify columns — no signature
     recomputation, no corpus text read, no cross join. New-shard work
-    is the with_minhash kernel over the SHARD only."""
+    is the minhash_signatures kernel over the SHARD only."""
     spark = new_sdf.sparkSession
     meta = read_store_meta(spark, path)
     k, bands = meta["num_hashes"], meta["bands"]
     sig_cols = [f"mh{i}" for i in range(k)]
-    new_sig = with_minhash(
+    new_sig = minhash_signatures(
         new_sdf,
         text_col=text_col,
         num_hashes=k,
@@ -231,9 +227,9 @@ def stream_dedup_against_store(
     threshold: float = 0.5,
 ) -> SDF:
     """Streaming face of ``dedup_against_store``: documents arriving on
-    a stream match the persisted corpus via STATELESS signature
-    expressions (dedup.minhash_signature_cols — bit-identical to the
-    store's bulk kernel) and stream-static equi-joins against the
+    a stream match the persisted corpus via the STATELESS signature
+    expression (dedup.minhash_signature_struct_sql — equal to the
+    store's batch kernel) and stream-static equi-joins against the
     store's buckets and signatures. No mid-stream aggregation, no
     state: every micro-batch row either matches the corpus or passes.
 
@@ -242,8 +238,6 @@ def stream_dedup_against_store(
     the keep-side. Works identically on a batch frame (the Spark
     batch/stream API symmetry), which is how the test pins it to
     dedup_against_store's results."""
-    from .dedup import minhash_signature_struct_sql
-
     spark = stream_sdf.sparkSession
     meta = read_store_meta(spark, path)
     k, bands = meta["num_hashes"], meta["bands"]

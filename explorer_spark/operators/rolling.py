@@ -167,48 +167,6 @@ def _lower_median(ctx, a, window_size, min_periods, center):
     return F.when(cnt >= mp, out)
 
 
-def _weighted_quantile_expr(vals, wts, q):
-    """Weighted quantile via array sort + cumulative-weight linear interp.
-
-    Builds (value, weight) structs for non-null positions, sorts by
-    value, and interpolates where the normalized cumulative weight
-    crosses ``q``. Pure built-in array expressions (no UDF); cost is
-    O(n log n) per row in the window size, fine for the small fixed
-    windows the verb is for.
-    """
-    pairs = F.array_sort(
-        F.filter(
-            F.array(
-                *[F.struct(v.alias("v"), F.lit(wk).alias("w")) for v, wk in zip(vals, wts)]
-            ),
-            lambda s: s["v"].isNotNull(),
-        )
-    )
-    wsum = F.aggregate(pairs, F.lit(0.0), lambda acc, s: acc + s["w"])
-    target = wsum * F.lit(float(q))
-    # cum[i] = cumulative weight through element i
-    n = F.size(pairs)
-    idxs = F.sequence(F.lit(0), n - 1)
-    cums = F.transform(
-        idxs,
-        lambda i: F.aggregate(F.slice(pairs, 1, i + 1), F.lit(0.0), lambda acc, s: acc + s["w"]),
-    )
-    # first index whose cumulative weight reaches the target;
-    # array_position yields 0 (not null) when nothing matches, so guard
-    # explicitly instead of coalescing
-    pos = F.array_position(F.transform(cums, lambda cw: cw >= target), F.lit(True))
-    k = F.when(pos > 0, pos - 1).otherwise(n - 1)
-    vk = F.get(pairs, k)["v"]
-    prev_cum = F.when(k > 0, F.get(cums, k - 1)).otherwise(F.lit(0.0))
-    prev_v = F.when(k > 0, F.get(pairs, k - 1)["v"]).otherwise(vk)
-    frac = (target - prev_cum) / F.nullif(F.get(cums, k) - prev_cum, F.lit(0.0))
-    interp = prev_v + (vk - prev_v) * F.coalesce(frac, F.lit(1.0))
-    # below the first element's own mass, no interpolation span exists
-    return F.when(n == 0, F.lit(None).cast("double")).otherwise(
-        F.when(k == 0, vk.cast("double")).otherwise(interp.cast("double"))
-    )
-
-
 def register() -> None:
     """Install rolling ops into the expression op table."""
     from .. import expr as E

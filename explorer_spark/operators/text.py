@@ -67,10 +67,6 @@ def word_shingles(text: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingle_set(text: Column, n: int) -> Column:
-    return F.array_distinct(word_shingles(text, n))
-
-
 def shingle_rows(sdf, key_col: str, text_col: str, n: int):
     """(key, shingle) rows via posexplode + window leads — fully codegen'd
     (the expression form above runs interpreted: ~6x slower in bulk).

@@ -113,7 +113,7 @@ def _minhash_sql(i: int) -> str:
     base = f"({_hex15_sql('s')} % {MINHASH_P32})"
     mh = f"list_min(list_transform(sh, s -> ({MINHASH_A[i]} * {base} + {MINHASH_B[i]}) % {MINHASH_P32}))"
     # docs with <3 words have no shingles: hash the raw text through the
-    # same universal-hash family, mirroring with_minhash's coalesce
+    # same universal-hash family, mirroring minhash_signatures' fallback
     fb = f"({MINHASH_A[i]} * ({_hex15_sql('text')} % {MINHASH_P32}) + {MINHASH_B[i]}) % {MINHASH_P32}"
     return f"COALESCE({mh}, {fb})"
 
@@ -683,10 +683,10 @@ _SIMHASH_ORACLE = _simhash_oracle_sql(16)
 @query("q_dedup_simhash", _SIMHASH_ORACLE)
 def q_dedup_simhash(spark, sf_dir):
     """16-bit SimHash per document — explode + one groupBy, no UDF."""
-    from .operators.dedup import simhash16
+    from .operators.dedup import simhash_bits
 
     docs = _t(spark, sf_dir, "documents").lazy_sdf()
-    return simhash16(docs)
+    return simhash_bits(docs, 16)
 
 
 @query(

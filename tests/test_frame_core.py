@@ -177,6 +177,7 @@ def test_pivot_wider_longer(spark):
     assert wide.to_columns() == {"team": ["A", "B"], "mon": [1, 3], "tue": [2, 4]}
     back = wide.pivot_longer(["mon", "tue"], names_to="day", values_to="hours")
     assert back.n_rows() == 4
+    assert back.n_columns() == 3
 
 
 def test_join_suffix_and_hows(spark):

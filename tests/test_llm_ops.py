@@ -14,7 +14,7 @@ def docs(spark):
 
 
 def test_simhash64_deterministic_and_near_for_near_texts(spark):
-    from explorer_spark.operators.dedup import simhash64_pandas
+    from explorer_spark.operators.dedup import simhash_bits
 
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -22,9 +22,9 @@ def test_simhash64_deterministic_and_near_for_near_texts(spark):
         (3, "completely different content about spark engines and shuffles"),
     ]
     sdf = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r.doc_id: r.simhash64 for r in simhash64_pandas(sdf).collect()}
+    out = {r.doc_id: r.simhash for r in simhash_bits(sdf, bits=64).collect()}
     # deterministic
-    again = {r.doc_id: r.simhash64 for r in simhash64_pandas(sdf).collect()}
+    again = {r.doc_id: r.simhash for r in simhash_bits(sdf, bits=64).collect()}
     assert out == again
 
     def hamming(a, b):
@@ -34,23 +34,23 @@ def test_simhash64_deterministic_and_near_for_near_texts(spark):
 
 
 def test_lsh_candidate_pairs_finds_duplicates(spark):
-    from explorer_spark.operators.dedup import lsh_buckets, lsh_candidate_pairs, with_minhash
+    from explorer_spark.operators.dedup import lsh_buckets, lsh_candidate_pairs, minhash_signatures
 
     base = "spark catalyst optimizer rewrites the logical plan into physical stages"
     rows = [(1, base), (2, base), (3, "unrelated words entirely disjoint vocabulary here to use")]
     sdf = spark.createDataFrame(rows, ["doc_id", "text"])
-    sig = with_minhash(sdf, num_hashes=8, shingle_n=3)
+    sig = minhash_signatures(sdf, num_hashes=8, shingle_n=3)
     pairs = lsh_candidate_pairs(lsh_buckets(sig, num_hashes=8, bands=4)).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
 
 
 def test_hamming_candidates(spark):
-    from explorer_spark.operators.dedup import hamming_candidates, simhash64_pandas
+    from explorer_spark.operators.dedup import hamming_candidates, simhash_bits
 
     rows = [(1, "a b c d e f g h"), (2, "a b c d e f g h"), (3, "z y x w v u t s")]
     sdf = spark.createDataFrame(rows, ["doc_id", "text"])
-    sig = simhash64_pandas(sdf).withColumnRenamed("simhash64", "simhash")
-    got = hamming_candidates(sig, max_distance=0, bits=60).collect()
+    sig = simhash_bits(sdf, bits=64)
+    got = hamming_candidates(sig, max_distance=0, bits=64).collect()
     assert [(r.id_a, r.id_b, r.hamming) for r in got] == [(1, 2, 0)]
 
 
@@ -428,26 +428,27 @@ def test_assign_cells_nearest_centroid(spark):
     assert "Join" not in buf.getvalue()
 
 
-def test_simhash64_pandas_equals_expression_form(spark):
-    """The vectorized Arrow kernel is bit-identical to simhash_bits(64)
-    — including empty/whitespace docs and a trailing-empty batch (a
-    reduceat clamping bug once corrupted the last non-empty doc)."""
-    from explorer_spark.operators.dedup import simhash64_pandas, simhash_bits
+def test_simhash_bits_matches_reference(spark):
+    """simhash_bits(64) equals the pure-Python SimHash bit for bit,
+    sign bit included: empty and whitespace-only docs (one empty token),
+    tab/newline boundaries, and NBSP, which Java \\s does not split on."""
+    from support.signature_ref import simhash_ref
+
+    from explorer_spark.operators.dedup import simhash_bits
 
     rows = [
         (1, "aaa bbb ccc"),
-        (2, ""),            # trailing empty in the batch
-        (3, "   "),         # whitespace-only
+        (2, ""),
+        (3, "   "),
         (4, "zz yy"),
-        (5, ""),
-        (6, "hello\n"),     # Spark trim keeps \n -> trailing '' token
-        (7, "\tlead tab"),  # leading whitespace -> leading '' token
-        (8, "nb sp"),  # NBSP is NOT whitespace to Java \s
+        (5, "Hello\n"),
+        (6, "\tlead tab"),
+        (7, "nb\u00a0sp"),
     ]
-    sdf = spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1)
-    a = {r.doc_id: r.simhash for r in simhash_bits(sdf, bits=64).collect()}
-    b = {r.doc_id: r.simhash64 for r in simhash64_pandas(sdf).collect()}
-    assert a == b, {k: (a[k], b.get(k)) for k in a if a[k] != b.get(k)}
+    sdf = spark.createDataFrame(rows, ["doc_id", "text"])
+    got = {r.doc_id: r.simhash for r in simhash_bits(sdf, bits=64).collect()}
+    assert got == {k: simhash_ref(t) for k, t in rows}
+    assert any(v < 0 for v in got.values())  # the sign bit is exercised
 
 
 def test_assign_cells_empty_centroids(spark):
@@ -630,11 +631,13 @@ def test_ivf_recall_contract(spark):
 
 
 def test_stream_dedup_against_store(spark, tmp_path):
-    """The streaming face of the signature store: (1) the stateless
-    per-row signature expressions reproduce with_minhash's universal
-    hash family bit-for-bit; (2) a real Structured Streaming run over a
+    """The streaming face of the signature store: (1) the batch kernel
+    and the stateless SQL expression the stream probe uses both equal
+    the pure-Python MinHash; (2) a real Structured Streaming run over a
     parquet shard matches the batch dedup_against_store results."""
-    from explorer_spark.operators.dedup import minhash_signature_cols, with_minhash
+    from support.signature_ref import minhash_ref
+
+    from explorer_spark.operators.dedup import minhash_signature_struct_sql, minhash_signatures
     from explorer_spark.operators.dedup_store import (
         dedup_against_store,
         stream_dedup_against_store,
@@ -649,16 +652,13 @@ def test_stream_dedup_against_store(spark, tmp_path):
         (4, None),
     ]
     sdf = spark.createDataFrame(docs, "doc_id long, text string")
-    kern = with_minhash(sdf, num_hashes=8, shingle_n=3).select(
-        "doc_id", *[f"mh{i}" for i in range(8)]
-    )
+    kern = minhash_signatures(sdf, num_hashes=8, shingle_n=3)
     expr = sdf.select(
-        "doc_id",
-        *[s.alias(f"mh{i}") for i, s in enumerate(minhash_signature_cols(F.col("text"), 8, 3))],
-    )
-    krows = {r.doc_id: tuple(r)[1:] for r in kern.collect()}
-    erows = {r.doc_id: tuple(r)[1:] for r in expr.collect()}
-    assert krows == erows, "expression signatures diverge from the kernel family"
+        "doc_id", minhash_signature_struct_sql("text", 8, 3).alias("s")
+    ).select("doc_id", *[F.col("s")[f"m{i}"] for i in range(8)])
+    want = {k: minhash_ref(t, 8, 3) for k, t in docs}
+    assert {r.doc_id: tuple(r)[1:] for r in kern.collect()} == want
+    assert {r.doc_id: tuple(r)[1:] for r in expr.collect()} == want
 
     corpus = spark.createDataFrame(
         [
@@ -1017,130 +1017,85 @@ def test_stratified_sample_nested_rates_subset(spark, docs):
 
 
 def test_minhash_faces_property(spark):
-    """Hypothesis pin (round-11): for arbitrary texts (unicode,
-    whitespace edges, short docs) all four signature faces agree —
-    per-column exprs, one-pass struct, narrow Arrow kernel, bulk
-    join-back — with and without lowercase folding."""
-    from hypothesis import HealthCheck, given, settings
+    """Hypothesis pin: for arbitrary texts (None, empty, unicode,
+    whitespace edges, short docs) both signature faces — the narrow
+    Arrow batch kernel and the one-expression SQL face — equal the
+    pure-Python MinHash, with and without lowercase folding."""
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
     from pyspark.sql import functions as F
+    from support.signature_ref import minhash_ref
 
-    import explorer_spark as ex
-    from explorer_spark.operators.dedup import (
-        minhash_signature_cols,
-        minhash_signature_struct,
-        minhash_signature_struct_sql,
-        minhash_signatures,
-        with_minhash,
-    )
+    from explorer_spark.operators.dedup import minhash_signature_struct_sql, minhash_signatures
+
+    edge_texts = [None, "", "ab XY", "\ta b c\n", "é中 XYZ  abc. é中"]
 
     texts_strategy = st.lists(
-        st.text(
-            alphabet=st.sampled_from(list("abc XYZ\t\n.é中")),
-            min_size=0,
-            max_size=40,
+        st.one_of(
+            st.none(),
+            st.text(alphabet=st.sampled_from(list("abc XYZ\t\n.é中")), min_size=0, max_size=40),
         ),
         min_size=1,
         max_size=6,
     )
 
     @given(texts=texts_strategy, lower=st.booleans())
+    @example(texts=edge_texts, lower=False)
+    @example(texts=edge_texts, lower=True)
     @settings(
         max_examples=25,
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
     )
     def check(texts, lower):
-        sdf = ex.from_columns(
-            {"doc_id": list(range(len(texts))), "text": texts}, spark=spark
-        ).lazy_sdf()
+        sdf = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
 
         def rows(x):
-            return sorted(
-                (r["doc_id"], tuple(r[f"mh{i}"] for i in range(4)))
-                for r in x.select("doc_id", *[f"mh{i}" for i in range(4)]).collect()
-            )
+            return {r["doc_id"]: tuple(r[f"mh{i}"] for i in range(4)) for r in x.collect()}
 
-        cols_face = rows(
-            sdf.select(
-                "doc_id",
-                *[
-                    c.alias(f"mh{i}")
-                    for i, c in enumerate(
-                        minhash_signature_cols(F.col("text"), 4, 3, lowercase=lower)
-                    )
-                ],
-            )
-        )
-        struct_face = rows(
-            sdf.select(
-                "doc_id",
-                minhash_signature_struct(F.col("text"), 4, 3, lowercase=lower).alias("s"),
-            ).select("doc_id", *[F.col("s")[f"m{i}"].alias(f"mh{i}") for i in range(4)])
-        )
         narrow_face = rows(minhash_signatures(sdf, num_hashes=4, shingle_n=3, lowercase=lower))
-        bulk_face = rows(with_minhash(sdf, num_hashes=4, shingle_n=3, lowercase=lower))
         sql_face = rows(
             sdf.select(
                 "doc_id",
                 minhash_signature_struct_sql("text", 4, 3, lowercase=lower).alias("s"),
             ).select("doc_id", *[F.col("s")[f"m{i}"].alias(f"mh{i}") for i in range(4)])
         )
-        assert cols_face == struct_face == narrow_face == bulk_face == sql_face
+        want = {k: minhash_ref(t, 4, 3, lowercase=lower) for k, t in enumerate(texts)}
+        assert narrow_face == want
+        assert sql_face == want
 
     check()
 
 
-def test_minhash_merged_shingle_face_equivalence(spark):
-    """r11 optimization pin: minhash_signatures_with_shingles (the ONE-
-    pass signature + shingle-set kernel the verify pipelines now use)
-    must produce signatures bit-identical to minhash_signatures and the
-    same per-doc shingle SETS as the two-pass shingle_rows+collect_set
-    rendering it replaced — including short docs (no shingle row, but a
-    fallback signature) and lowercase folding."""
-    from pyspark.sql import functions as F
+def test_candidate_shingle_sets_match_reference(spark):
+    """candidate_shingle_sets yields exactly the pure-Python distinct
+    shingle set of every named doc with >= shingle_n words (shorter docs
+    produce no row), with and without lowercase folding, and only for
+    the docs named in the candidate ids."""
+    from support.signature_ref import shingles
 
-    import explorer_spark as ex
-    from explorer_spark.operators.dedup import (
-        minhash_signatures,
-        minhash_signatures_with_shingles,
-    )
-    from explorer_spark.operators.text import shingle_rows
+    from explorer_spark.operators.dedup import candidate_shingle_sets
 
     texts = [
         "the quick brown fox jumps over the lazy dog",
         "the quick brown fox jumps over the lazy cat",
         "  \t tab-led doc with words aplenty here  ",
-        "short doc",  # < 3 words -> fallback signature, no shingles
+        "short doc",  # < 3 words -> no row
         "",
         "MiXeD Case TEXT for the folding face check",
+        "a doc that is never a candidate",
     ]
-    sdf = ex.from_columns(
-        {"doc_id": list(range(len(texts))), "text": texts}, spark=spark
-    ).lazy_sdf()
+    sdf = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    cand_ids = spark.range(6).withColumnRenamed("id", "doc_id")
     for lower in (False, True):
-        sig, sh = minhash_signatures_with_shingles(
-            sdf, num_hashes=4, shingle_n=3, lowercase=lower, pin=False
-        )
-        ref_sig = minhash_signatures(sdf, num_hashes=4, shingle_n=3, lowercase=lower)
-
-        def sig_rows(x):
-            return sorted(
-                (r["doc_id"], tuple(r[f"mh{i}"] for i in range(4))) for r in x.collect()
-            )
-
-        assert sig_rows(sig) == sig_rows(ref_sig)
-        src = sdf.withColumn("text", F.lower("text")) if lower else sdf
-        ref_sh = (
-            shingle_rows(src, "doc_id", "text", 3)
-            .groupBy("doc_id")
-            .agg(F.collect_set("shingle").alias("sh"))
-        )
-
-        def sh_rows(x):
-            return sorted((r["doc_id"], frozenset(r["sh"])) for r in x.collect())
-
-        assert sh_rows(sh) == sh_rows(ref_sh)
+        sh = candidate_shingle_sets(sdf, cand_ids, shingle_n=3, lowercase=lower)
+        got = {r["doc_id"]: frozenset(r["sh"]) for r in sh.collect()}
+        want = {
+            k: frozenset(shingles(t.lower() if lower else t, 3))
+            for k, t in enumerate(texts[:6])
+            if shingles(t, 3)
+        }
+        assert got == want
 
 
 def test_maybe_pin_gram_stream_gate(spark, tmp_path, monkeypatch):
@@ -1169,11 +1124,12 @@ def test_maybe_pin_gram_stream_gate(spark, tmp_path, monkeypatch):
 def test_lsh_candidate_pairs_with_sets_equivalence(spark):
     """r12 optimization pin: lsh_candidate_pairs_with_sets (narrow
     signature pin + CANDIDATE-ONLY shingle sets) must produce exactly
-    the pair set and shingle sets of the r11 merged-aggregate pipeline
-    it replaces — the candidate semi-join filter changes WHICH docs get
-    tokenized for the verify, never the sets of docs that are actually
-    candidates. Includes short docs (fallback signatures, no shingle
-    rows -> inner attach drops their pairs, both faces)."""
+    the pair set and shingle sets of the plain whole-corpus pipeline
+    (signatures -> banding, shingle_rows + collect_set for every doc) —
+    the candidate semi-join filter changes WHICH docs get tokenized for
+    the verify, never the sets of docs that are actually candidates.
+    Includes short docs (fallback signatures, no shingle rows -> inner
+    attach drops their pairs, both sides)."""
     from pyspark.sql import functions as F
 
     import explorer_spark as ex
@@ -1181,8 +1137,9 @@ def test_lsh_candidate_pairs_with_sets_equivalence(spark):
         lsh_buckets,
         lsh_candidate_pairs,
         lsh_candidate_pairs_with_sets,
-        minhash_signatures_with_shingles,
+        minhash_signatures,
     )
+    from explorer_spark.operators.text import shingle_rows
 
     texts = [
         "the quick brown fox jumps over the lazy dog",
@@ -1198,8 +1155,11 @@ def test_lsh_candidate_pairs_with_sets_equivalence(spark):
         {"doc_id": list(range(len(texts))), "text": texts}, spark=spark
     ).lazy_sdf()
     new = lsh_candidate_pairs_with_sets(sdf, num_hashes=8, bands=4, shingle_n=3)
-    sig, sh = minhash_signatures_with_shingles(sdf, num_hashes=8, shingle_n=3, pin=False)
+    sig = minhash_signatures(sdf, num_hashes=8, shingle_n=3)
     cand = lsh_candidate_pairs(lsh_buckets(sig, num_hashes=8, bands=4))
+    sh = shingle_rows(sdf, "doc_id", "text", 3).groupBy("doc_id").agg(
+        F.collect_set("shingle").alias("sh")
+    )
     sa = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("__sha__"))
     sb = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("__shb__"))
     old = cand.join(sa, "id_a").join(sb, "id_b")

@@ -7,6 +7,8 @@ literal') — the engine's TableRex-equivalent renderer must reproduce
 them byte for byte.
 """
 
+import pytest
+
 from explorer_spark.sources import from_columns
 
 
@@ -75,9 +77,12 @@ def test_asof_join_tables(spark):  # data_frame.ex:5468/5491/5514/5539
 
 
 def test_iris_tables(spark):  # data_frame.ex:6410/6427/6440
-    from explorer_spark.datasets import iris
+    from explorer_spark.datasets import DatasetNotFound, iris
 
-    df = iris(spark=spark)
+    try:
+        df = iris(spark=spark)
+    except DatasetNotFound as e:
+        pytest.skip(str(e))
     assert df.to_table_string() == (
         "+--------------------------------------------------------------------------+\n"
         "|               Explorer DataFrame: [rows: 150, columns: 5]                |\n"

@@ -106,7 +106,7 @@ def test_minhash_lsh_stays_bounded(spark):
     """
     from pyspark.sql import functions as F
 
-    from explorer_spark.operators.dedup import lsh_buckets, lsh_candidate_pairs, with_minhash
+    from explorer_spark.operators.dedup import lsh_buckets, lsh_candidate_pairs, minhash_signatures
     from explorer_spark.operators.text import shingle_rows
     from explorer_spark.sources import load_table
 
@@ -120,7 +120,7 @@ def test_minhash_lsh_stays_bounded(spark):
     n_shingles = shingle_rows(docs, "doc_id", "text", 3).count()
     assert n_shingles <= total_words
 
-    sig = with_minhash(docs, num_hashes=8, shingle_n=3)
+    sig = minhash_signatures(docs, num_hashes=8, shingle_n=3)
     buckets = lsh_buckets(sig, num_hashes=8, bands=4)
     cand = lsh_candidate_pairs(buckets)
 
@@ -916,45 +916,35 @@ def test_ws_case_census_component_equivalence_with_folding_shinglers(spark):
 
 
 def test_lowercase_signatures_bit_identical_across_faces(spark):
-    """lowercase=True folds through the SAME Spark expression in every
-    signature face: bulk join-back (with_minhash), narrow Arrow
-    (minhash_signatures), stateless struct (the stream face) — all three
-    must emit identical signatures, equal to the unfolded kernels over
+    """lowercase=True folds through the SAME Spark expression in both
+    signature faces: narrow Arrow (minhash_signatures) and the stateless
+    SQL expression (the stream face) must both equal the pure-Python
+    MinHash over lowercased text, and the unfolded kernel over
     pre-lowered text."""
+    from support.signature_ref import minhash_ref
+
     import explorer_spark as ex
-    from explorer_spark.operators.dedup import (
-        minhash_signature_struct,
-        minhash_signatures,
-        with_minhash,
-    )
+    from explorer_spark.operators.dedup import minhash_signature_struct_sql, minhash_signatures
     from pyspark.sql import functions as F
 
-    docs = ex.from_columns(
-        {
-            "doc_id": [1, 2, 3, 4],
-            "text": [
-                "The Quick BROWN fox JUMPS high",
-                "MiXeD CaSe document talking about Things",
-                "ab",  # < shingle_n words -> fallback hash path
-                "ALL UPPER CASE WORDS HERE",
-            ],
-        },
-        spark=spark,
-    ).lazy_sdf()
+    texts = [
+        "The Quick BROWN fox JUMPS high",
+        "MiXeD CaSe document talking about Things",
+        "ab",  # < shingle_n words -> fallback hash path
+        "ALL UPPER CASE WORDS HERE",
+    ]
+    docs = ex.from_columns({"doc_id": [1, 2, 3, 4], "text": texts}, spark=spark).lazy_sdf()
 
     def rows(sdf):
-        return sorted(
-            (r["doc_id"], tuple(r[f"mh{i}"] for i in range(8)))
-            for r in sdf.select("doc_id", *[f"mh{i}" for i in range(8)]).collect()
-        )
+        return {r["doc_id"]: tuple(r[f"mh{i}"] for i in range(8)) for r in sdf.collect()}
 
-    bulk = rows(with_minhash(docs, num_hashes=8, shingle_n=3, lowercase=True))
     narrow = rows(minhash_signatures(docs, num_hashes=8, shingle_n=3, lowercase=True))
     st = docs.select(
         "doc_id",
-        minhash_signature_struct(F.col("text"), num_hashes=8, shingle_n=3, lowercase=True).alias("s"),
+        minhash_signature_struct_sql("text", num_hashes=8, shingle_n=3, lowercase=True).alias("s"),
     ).select("doc_id", *[F.col("s")[f"m{i}"].alias(f"mh{i}") for i in range(8)])
     stateless = rows(st)
     pre_lowered = docs.withColumn("text", F.lower(F.col("text")))
     baseline = rows(minhash_signatures(pre_lowered, num_hashes=8, shingle_n=3))
-    assert bulk == narrow == stateless == baseline
+    want = {k: minhash_ref(t, 8, 3, lowercase=True) for k, t in zip([1, 2, 3, 4], texts)}
+    assert narrow == stateless == baseline == want

@@ -161,7 +161,7 @@ def build_kernels(spark, sf_dir: str, scratch: str):
         star_pairs.count()
 
     def minhash_lsh(m):
-        sigs = dedup.with_minhash(docs_at(m), num_hashes=8, shingle_n=3)
+        sigs = dedup.minhash_signatures(docs_at(m), num_hashes=8, shingle_n=3)
         buckets = dedup.lsh_buckets(sigs, num_hashes=8, bands=4)
         dedup.lsh_candidate_pairs(buckets).count()
 
