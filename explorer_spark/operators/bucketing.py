@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame as SDF, SparkSession
 
+from ..sizing import estimate_bytes
+
 
 def write_bucketed(
     sdf: SDF, table: str, key: str, buckets: int = 8, sort: bool = True, mode: str = "overwrite"
@@ -121,12 +123,7 @@ def fan_out_small(sdf, min_factor: int = 2):
     # cost is bounded and the wrong-parallelism failure mode (a whole
     # md5/Arrow pipeline on 1-2 tasks) is far costlier.
     if sdf.rdd.getNumPartitions() < gate:
-        width = par
-        try:
-            est = int(sdf._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            if 0 < est < (1 << 50):
-                width = max(2, min(par, -(-est // (64 * 1024))))
-        except Exception:
-            pass
+        est = estimate_bytes(sdf)
+        width = par if est is None else max(2, min(par, -(-est // (64 * 1024))))
         return sdf.repartition(width)
     return sdf

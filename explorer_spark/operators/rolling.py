@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 
 from ..expr import LowerCtx, _c, _ordered_window
 
+# grouped ewm: groups above this many rows leave the per-group pandas
+# frame for the distributed prefix-composition kernel
+EWM_GROUP_GATE = 1 << 21
+
 _ROLL_FNS = {
     "window_sum": F.sum,
     "window_mean": F.avg,
@@ -266,14 +270,11 @@ def ewm_columns(frame, specs: dict[str, tuple], order_cols=None):
         # per-group carry combine; the ignore_nils=False + adjust=False
         # corner routes through ewm_gapped's grouped face) while
         # normal-size groups keep the pandas path.
-        import os
-
-        gate = int(os.environ.get("SPARK_GRAFT_EWM_GROUP_GATE", 1 << 21))
         mx = None
         # limit-probe first: a frame with <= gate rows can't hold a
         # giant group, and the limit short-circuits without the
         # group-count shuffle (the common case pays ~one scan task)
-        if sdf.limit(gate + 1).count() > gate:
+        if sdf.limit(EWM_GROUP_GATE + 1).count() > EWM_GROUP_GATE:
             mx_row = (
                 sdf.groupBy(*groups)
                 .agg(F.count(F.lit(1)).alias("__c__"))
@@ -281,8 +282,8 @@ def ewm_columns(frame, specs: dict[str, tuple], order_cols=None):
                 .first()
             )
             mx = mx_row["__m__"] if mx_row else None
-        if mx is not None and mx > gate:
-            return _ewm_grouped_giant(sdf, groups, specs, out_schema, apply_bucket, nb, gate)
+        if mx is not None and mx > EWM_GROUP_GATE:
+            return _ewm_grouped_giant(sdf, groups, specs, out_schema, apply_bucket, nb, EWM_GROUP_GATE)
         bucketed = sdf.withColumn("__ewmb__", F.pmod(F.xxhash64(*groups), F.lit(nb)))
         out = bucketed.groupBy("__ewmb__").applyInPandas(apply_bucket, out_schema)
         return DataFrame(out, groups=groups, has_order=True)

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from ..sizing import estimate_bytes
+
 # A tiny embedded stopword list (public-domain English function words).
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
 
@@ -701,9 +703,14 @@ def clean_lines(sdf, text_col: str = "text", id_col: str = "doc_id", min_words: 
 
 
 # Budget for pinning a derived gram stream (bytes of estimated
-# MATERIALIZED grams, ~6x the input text bytes). Default 1 GiB: far above
-# any bench/test corpus, far below what a 100 TB corpus would expand to.
-GRAM_PIN_DEFAULT_BYTES = 1 << 30
+# MATERIALIZED grams, ~6x the input text bytes). 1 GiB: far above any
+# bench/test corpus, far below what a 100 TB corpus would expand to.
+GRAM_PIN_BYTES = 1 << 30
+
+# remove_repeated_spans' target per-partition (id, pos) volume: sized so
+# the r8 64x probe's measured optimum (~17.5M words -> ~128 partitions;
+# 32 spills, 256 pays the over-partitioning tax) falls out of the formula
+SPANS_ROWS_PER_PARTITION = 150_000
 
 
 def maybe_pin_gram_stream(grams: SDF, src: SDF, text_col: str = "text", expand_factor: int = 6):
@@ -713,26 +720,14 @@ def maybe_pin_gram_stream(grams: SDF, src: SDF, text_col: str = "text", expand_f
     map-only Arrow kernel re-tokenizes the corpus once per consumer;
     with one, the block manager holds ~``expand_factor`` x the input
     text bytes. Pin iff Catalyst's free column-pruned input estimate,
-    expanded, fits the budget (``SPARK_GRAFT_GRAM_PIN_BYTES``, default
-    1 GiB) — at corpus scale the estimate exceeds any sane budget and
-    the stream stays map-only (a second tokenization pass beats
+    expanded, fits the budget (``GRAM_PIN_BYTES``, 1 GiB) — at corpus
+    scale the estimate exceeds any sane budget and the stream stays
+    map-only (a second tokenization pass beats
     materializing ~6x 100 TB); test/bench-sized inputs pin and skip the
-    second pass (measured ~15% at sf0.1). Unknown statistics
-    (checkpointed plans report the defaultSizeInBytes sentinel) never
-    pin. Returns ``(stream, pinned)``."""
-    import os as _os
-
-    try:
-        plan = src.select(text_col)._jdf.queryExecution().optimizedPlan()
-        est = int(plan.stats().sizeInBytes())
-    except Exception:
-        return grams, False
-    if not (0 < est < (1 << 50)):
-        return grams, False
-    budget = int(
-        _os.environ.get("SPARK_GRAFT_GRAM_PIN_BYTES", str(GRAM_PIN_DEFAULT_BYTES))
-    )
-    if est * expand_factor <= budget:
+    second pass (measured ~15% at sf0.1). Unknown statistics never pin.
+    Returns ``(stream, pinned)``."""
+    est = estimate_bytes(src.select(text_col))
+    if est is not None and est * expand_factor <= GRAM_PIN_BYTES:
         return grams.localCheckpoint(eager=False), True
     return grams, False
 
@@ -769,12 +764,11 @@ def remove_repeated_spans(
     # the (id, pos) joins below shuffle into spark.sql.shuffle.partitions
     # — a fixed small count spills once the exploded word volume grows
     # (the 64x probe: 32 partitions 42.7 s vs 128 partitions 22.4 s).
-    # Size the exchanges from the DATA: one map-side-combined word-count
-    # scan, then ceil(total_words / rows_per_partition), floored at the
-    # session default so small corpora don't over-partition.
-    # SPARK_GRAFT_SPANS_ROWS_PER_PARTITION is the deployment knob.
+    # Size the exchanges from the DATA: ceil(total_words /
+    # SPANS_ROWS_PER_PARTITION), floored at the session default so small
+    # corpora don't over-partition.
     import math
-    import os
+    import re
 
     spark = sdf.sparkSession
     # estimate WITHOUT running a job (round-10: the previous count() +
@@ -785,30 +779,26 @@ def remove_repeated_spans(
     # compression roughly cancels the raw ~6 bytes/word), so 1 byte ≈ 1
     # word; less-compressible corpora estimate MORE bytes per word,
     # which over-partitions — the cheap direction (vs spilling).
-    try:
-        plan = sdf.select(text_col)._jdf.queryExecution().optimizedPlan()
-        est_bytes = int(plan.stats().sizeInBytes())
+    texts = sdf.select(text_col)
+    n_words_total = estimate_bytes(texts)
+    if n_words_total is not None:
         # the ~1 byte/word calibration is a PARQUET-scan property
         # (compression cancels raw bytes/word); CSV/JSON scans report
         # raw bytes — 5-10x the word count — so a non-parquet source
-        # with known stats would over-partition by that factor. Gate the
-        # stats path on a parquet RELATION: the optimized plan renders
-        # leaf scans as "Relation [cols...] <format>", so match the
-        # format token itself — a bare substring test would misfire on
-        # file paths or column names containing "parquet"
-        import re as _re
-
-        fmts = _re.findall(r"Relation \[[^\]]*\] (\w+)", plan.toString())
+        # with known stats would over-partition by that factor. Trust
+        # the estimate only over parquet RELATIONS: the optimized plan
+        # (already built by the estimate) renders leaf scans as
+        # "Relation [cols...] <format>", so match the format token
+        # itself — a bare substring test would misfire on file paths or
+        # column names containing "parquet"
+        plan = texts._jdf.queryExecution().optimizedPlan().toString()
+        fmts = re.findall(r"Relation \[[^\]]*\] (\w+)", plan)
         if not fmts or any(f.lower() != "parquet" for f in fmts):
-            est_bytes = 0
-    except Exception:
-        est_bytes = 0
-    if 0 < est_bytes < (1 << 50):
-        n_words_total = est_bytes
-    else:
-        # statistics unknown (checkpointed/in-memory plans report the
-        # Long.MaxValue-scaled defaultSizeInBytes sentinel; joins can
-        # overflow past 2^50): fall back to the measured estimate —
+            n_words_total = None
+    if n_words_total is None:
+        # statistics unknown or not from a parquet scan (a checkpoint
+        # keeps its origin's statistics but renders as LogicalRDD): fall
+        # back to the measured estimate —
         # row count (metadata-cheap) x a 200-row words-per-doc average —
         # rather than silently disabling the partition sizing
         n_docs = sdf.count()
@@ -820,15 +810,11 @@ def remove_repeated_spans(
             or 0
         )
         n_words_total = int(n_docs * avg_row)
-    # target per-partition (id, pos) volume: sized so the r8 64x probe's
-    # measured optimum (~17.5M words -> ~128 partitions; 32 spills, 256
-    # pays the over-partitioning tax) falls out of the formula
-    per_part = int(os.environ.get("SPARK_GRAFT_SPANS_ROWS_PER_PARTITION", 150_000))
     try:
         default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     except (ValueError, TypeError):
         default_parts = 32
-    nparts = max(default_parts, math.ceil(n_words_total / per_part))
+    nparts = max(default_parts, math.ceil(n_words_total / SPANS_ROWS_PER_PARTITION))
 
     def _sized(df, *cols):
         # explicit exchanges only when the data OUTGROWS the session

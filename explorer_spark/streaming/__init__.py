@@ -69,7 +69,7 @@ def sessionize_batch(events: SDF, gap_minutes: int = 30, ts_col: str = "ts", use
     )
 
 
-def stream_session(spark, shuffle_partitions: int | None = None, input_path: str | None = None):
+def stream_session(spark, input_path: str | None = None):
     """Clone the session with a right-sized shuffle-partition count for a
     stream run (state-store instances scale per partition per
     micro-batch; builder-level SQL confs are SparkConf-backed and
@@ -77,25 +77,19 @@ def stream_session(spark, shuffle_partitions: int | None = None, input_path: str
     stateful.run_stateful_once.
 
     Sizing (r12, replacing the r11 constant 4 the verdict called
-    bench-sized): explicit arg > SPARK_GRAFT_STREAM_SHUFFLE env > DERIVED
-    from the input directory's bytes (one partition per ~32 MB of input,
-    floor 2 so partition-spanning semantics stay exercised, capped by the
-    session's batch shuffle partitions) > legacy constant 8. Every
-    stateful stage commits one state-store instance per shuffle partition
-    PER MICRO-BATCH, so partitions must track the DATA, not the core
-    count — the same §2.2 rule the batch session applies via AQE, which
-    streaming stateful stages cannot use."""
+    bench-sized): DERIVED from the input directory's bytes (one
+    partition per ~32 MB of input, floor 2 so partition-spanning
+    semantics stay exercised, capped by the session's batch shuffle
+    partitions), else 8 when there is no readable input directory. The
+    session comes back unchanged when it already has at most that many.
+    Every stateful stage commits one state-store instance per shuffle
+    partition PER MICRO-BATCH, so partitions must track the DATA, not
+    the core count — the same §2.2 rule the batch session applies via
+    AQE, which streaming stateful stages cannot use."""
     import os as _os
 
-    n = shuffle_partitions
-    if n is None:
-        env = _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "")
-        if env:
-            try:
-                n = int(env)
-            except ValueError:
-                n = None
-    if n is None and input_path:
+    n = 8
+    if input_path:
         try:
             total = 0
             for root, _dirs, files in _os.walk(input_path):
@@ -105,15 +99,13 @@ def stream_session(spark, shuffle_partitions: int | None = None, input_path: str
             cap = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
             n = max(2, min(cap, -(-total // (32 * 1024 * 1024))))
         except (OSError, ValueError, TypeError):
-            n = None
-    if n is None:
-        n = 8
+            pass
     try:
         # non-numeric on some platforms (e.g. "auto") — skip the clone then
         current = int(spark.conf.get("spark.sql.shuffle.partitions", "0"))
     except (ValueError, TypeError):
         current = 0
-    if n and current > n:
+    if current > n:
         sess = spark.newSession()
         sess.conf.set("spark.sql.shuffle.partitions", str(n))
         return sess
@@ -128,7 +120,6 @@ def run_stream_once(
     schema=None,
     output_mode: str | None = None,
     options: dict | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SDF:
     """Drive a parquet dir through readStream -> transform -> memory sink,
     synchronously (for tests / local verification). ``output_mode``
@@ -137,17 +128,16 @@ def run_stream_once(
     (e.g. ``maxFilesPerTrigger=1`` for deterministic micro-batch splits
     in watermark tests — the file source processes oldest-mtime first).
 
-    The stream runs in a CLONED session with a smaller
-    ``spark.sql.shuffle.partitions`` (default 8, env
-    SPARK_GRAFT_STREAM_SHUFFLE; 0 disables): every stateful stage spawns
-    one state-store instance per shuffle partition PER MICRO-BATCH, so a
+    The stream runs in a CLONED session whose
+    ``spark.sql.shuffle.partitions`` comes from the input directory's
+    bytes (``stream_session``): every stateful stage spawns one
+    state-store instance per shuffle partition PER MICRO-BATCH, so a
     32-partition local session pays 32 state commits a batch for
     kilobyte-scale state. Builder-level SQL confs (timezone, ANSI,
     nanosAsLong) are SparkConf-backed and inherited by the clone; the
     transform must build its static sides from the stream's session
-    (``stream_sdf.sparkSession``), which all repo operators do. On a
-    real cluster, size it to the stream's actual state width instead."""
-    sess = stream_session(spark, shuffle_partitions, input_path=parquet_path)
+    (``stream_sdf.sparkSession``), which all repo operators do."""
+    sess = stream_session(spark, input_path=parquet_path)
     if schema is None:
         schema = sess.read.parquet(parquet_path).schema
     reader = sess.readStream.schema(schema)

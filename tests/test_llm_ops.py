@@ -191,6 +191,29 @@ def test_streaming_tumbling_matches_batch(spark, tmp_path):
     assert got == batch
 
 
+def test_stream_session_partitions(spark, tmp_path):
+    """stream_session sizes a stream's shuffle partitions from its input
+    bytes (floor 2), or 8 without an input directory, and clones the
+    session only when the batch session has more partitions than that."""
+    from explorer_spark.streaming import stream_session
+
+    path = str(tmp_path / "tiny")
+    spark.range(10).write.parquet(path)
+    wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "16")
+    sess = stream_session(wide, input_path=path)
+    assert sess is not wide
+    assert sess.conf.get("spark.sql.shuffle.partitions") == "2"
+    assert wide.conf.get("spark.sql.shuffle.partitions") == "16"
+    sess = stream_session(wide)
+    assert sess is not wide
+    assert sess.conf.get("spark.sql.shuffle.partitions") == "8"
+    for n, input_path in (("2", path), ("8", None)):
+        narrow = spark.newSession()
+        narrow.conf.set("spark.sql.shuffle.partitions", n)
+        assert stream_session(narrow, input_path=input_path) is narrow
+
+
 def test_streaming_session_window(spark, tmp_path):
     from explorer_spark.sources import read_parquet
     from explorer_spark.streaming import run_stream_once, session_windows_stream
@@ -1102,7 +1125,8 @@ def test_maybe_pin_gram_stream_gate(spark, tmp_path, monkeypatch):
     """r12 gate: the gram-stream pin fires only when the estimated
     materialized grams fit the byte budget — small parquet input pins,
     a 1-byte budget (scale stand-in) does not, and unknown statistics
-    (checkpointed source) never pin. Results identical either way."""
+    (an RDD-backed source) never pin. Results identical either way."""
+    from explorer_spark.operators import text
     from explorer_spark.operators.text import maybe_pin_gram_stream, shingle_rows_arrow
 
     p = str(tmp_path / "docs.parquet")
@@ -1112,10 +1136,11 @@ def test_maybe_pin_gram_stream_gate(spark, tmp_path, monkeypatch):
     ).write.parquet(p)
     src = spark.read.parquet(p)
     grams = shingle_rows_arrow(src, "doc_id", "text", 3)
-    monkeypatch.delenv("SPARK_GRAFT_GRAM_PIN_BYTES", raising=False)
     pinned_df, pinned = maybe_pin_gram_stream(grams, src, "text")
     assert pinned is True
-    monkeypatch.setenv("SPARK_GRAFT_GRAM_PIN_BYTES", "1")
+    rdd_src = spark.createDataFrame(src.rdd, src.schema)
+    assert maybe_pin_gram_stream(grams, rdd_src, "text")[1] is False
+    monkeypatch.setattr(text, "GRAM_PIN_BYTES", 1)
     unpinned_df, pinned2 = maybe_pin_gram_stream(grams, src, "text")
     assert pinned2 is False  # over-budget input (scale stand-in): stays map-only
     assert sorted(map(tuple, pinned_df.collect())) == sorted(map(tuple, unpinned_df.collect()))

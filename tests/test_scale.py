@@ -266,6 +266,7 @@ def test_fan_out_small_gates(spark):
     $cores width made kernel task counts scale with cores and the same
     corpus measured faster at 8 cores than 32)."""
     from explorer_spark.operators.bucketing import fan_out_small
+    from explorer_spark.sizing import estimate_bytes
 
     par = spark.sparkContext.defaultParallelism
     one = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -273,11 +274,27 @@ def test_fan_out_small_gates(spark):
     fanned = fan_out_small(one)
     assert 2 <= fanned.rdd.getNumPartitions() <= par
     # byte-derived: the tiny sf0.001 file must not fan to full cores
-    est = int(one._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    est = estimate_bytes(one)
     expect = max(2, min(par, -(-est // (64 * 1024))))
     assert fanned.rdd.getNumPartitions() == expect
     wide = one.repartition(par)
     assert fan_out_small(wide) is wide
+
+
+def test_estimate_bytes(spark, tmp_path):
+    """Catalyst's estimate is a positive byte count for a parquet scan
+    and None for unknown statistics: an RDD-backed frame reports the
+    defaultSizeInBytes sentinel, and so does its local checkpoint (a
+    checkpoint keeps its origin's statistics)."""
+    from explorer_spark.sizing import estimate_bytes
+
+    rows, schema = [(1, "a b"), (2, "c d")], "doc_id long, text string"
+    spark.createDataFrame(rows, schema).write.parquet(str(tmp_path / "p"))
+    est = estimate_bytes(spark.read.parquet(str(tmp_path / "p")))
+    assert isinstance(est, int) and est > 0
+    rdd_backed = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    assert estimate_bytes(rdd_backed) is None
+    assert estimate_bytes(rdd_backed.localCheckpoint()) is None
 
 
 def test_decontaminate_plan_is_broadcast_equi_join(spark):
@@ -556,6 +573,7 @@ def test_grouped_ewm_giant_group_bounded(spark, monkeypatch):
     import numpy as np
     import pandas as pd
 
+    from explorer_spark.operators import rolling
     from explorer_spark.sources import from_pandas
 
     rng = np.random.default_rng(11)
@@ -583,7 +601,7 @@ def test_grouped_ewm_giant_group_bounded(spark, monkeypatch):
         )
 
     base = run()  # default gate: pandas bucket path
-    monkeypatch.setenv("SPARK_GRAFT_EWM_GROUP_GATE", "500")
+    monkeypatch.setattr(rolling, "EWM_GROUP_GATE", 500)
     gated = run()
     import math
 
@@ -601,6 +619,53 @@ def test_grouped_ewm_giant_group_bounded(spark, monkeypatch):
     )
     plan = _plan(gdf.lazy_sdf())
     assert "__bkt__" in plan or "__ewm_bucket__" in plan or "FlatMapGroupsInPandas" in plan, plan
+
+
+def test_remove_repeated_spans_word_estimate_paths(spark, tmp_path):
+    """remove_repeated_spans sizes its exchanges from Catalyst's estimate
+    only over a parquet scan (the 1 byte ~ 1 word calibration); a CSV
+    scan or a checkpointed source takes the count fallback, an eager
+    row count plus a words-per-doc probe. The pipeline's own pins submit
+    the same jobs on every source, so the build-time job difference is
+    the fallback. Output rows are identical on every path."""
+    from explorer_spark.operators.text import remove_repeated_spans
+
+    shared = "alpha beta gamma delta epsilon zeta eta"
+    rows = [
+        (1, f"one two three {shared} four five"),
+        (2, f"{shared} six seven eight nine ten"),
+        (3, "completely unique words here nothing repeats at all"),
+    ]
+    schema = "doc_id long, text string"
+    src = spark.createDataFrame(rows, schema)
+    src.write.parquet(str(tmp_path / "p"))
+    src.write.option("header", True).csv(str(tmp_path / "c"))
+    parquet = spark.read.parquet(str(tmp_path / "p"))
+    sources = {
+        "parquet": parquet,
+        "csv": spark.read.schema(schema).option("header", True).csv(str(tmp_path / "c")),
+        "checkpoint": parquet.localCheckpoint(),
+    }
+    sc = spark.sparkContext
+    jobs, got = {}, {}
+    for name, sdf in sources.items():
+        group = f"spans_estimate_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            out = remove_repeated_spans(sdf, gram_n=5, min_count=2)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        got[name] = sorted(map(tuple, out.collect()))
+    fallback = jobs["csv"] - jobs["parquet"]
+    assert fallback > 0, jobs
+    assert jobs["checkpoint"] - jobs["parquet"] == fallback, jobs
+    want = [
+        (1, "one two three four five", 12, 7),
+        (2, "six seven eight nine ten", 12, 7),
+        (3, rows[2][1], 8, 0),
+    ]
+    assert got == {name: want for name in sources}
 
 
 def test_remove_repeated_spans_plan_shape(spark):
