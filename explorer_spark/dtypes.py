@@ -70,6 +70,40 @@ def is_float(dtype) -> bool:
     return isinstance(dtype, tuple) and dtype[0] == "f"
 
 
+_UNIT_SHORT = {"second": "s", "millisecond": "ms", "microsecond": "us", "nanosecond": "ns"}
+
+# µs per unit of a temporal precision: storage is physically µs (ns is
+# logical only, a thousandth of the physical unit)
+US_PER_UNIT = {"s": 1_000_000, "ms": 1_000, "us": 1, "ns": 0.001}
+
+
+def unit_of(d) -> str:
+    """Short precision unit ("s"/"ms"/"us"/"ns") of a unit name or of a
+    naive_datetime/datetime/duration dtype (µs when it names none)."""
+    if isinstance(d, tuple):
+        d = d[1] if len(d) > 1 else "us"
+    return _UNIT_SHORT.get(d, d)
+
+
+def list_leaf(d):
+    """Innermost element dtype of a (possibly nested) list dtype."""
+    d = normalize(d)
+    while isinstance(d, tuple) and d[0] == "list":
+        d = normalize(d[1])
+    return d
+
+
+def check_tz(tz: str) -> None:
+    """Eager zone validation (the reference raises ArgumentError for an
+    unknown zone at cast time, not lazily at execution)."""
+    from zoneinfo import ZoneInfo
+
+    try:
+        ZoneInfo(tz)
+    except (KeyError, ValueError, OSError, TypeError):
+        raise ValueError(f"unknown time zone {tz!r}") from None
+
+
 def time_to_ns(t) -> int:
     """datetime.time -> the engine's physical :time rendering
     (nanoseconds since midnight). The single definition every literal

@@ -19,6 +19,7 @@ import re
 
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -43,6 +44,19 @@ class LowerCtx:
     # input types by analyzing a select against it (analysis only,
     # no job); None degrades to Spark's default typing
     sdf: object = None
+
+
+def _probe_fields(ctx: LowerCtx, *cols: Column) -> list | None:
+    """Analysis-only schema fields of ``cols`` against ``ctx.sdf`` — one
+    select per call, no job. None without a frame, or when the select
+    does not resolve against it (a column lowered for another context);
+    the caller then keeps Spark's own typing."""
+    if ctx.sdf is None:
+        return None
+    try:
+        return ctx.sdf.select(*(c.alias(f"__p{i}__") for i, c in enumerate(cols))).schema.fields
+    except AnalysisException:
+        return None
 
 
 def _group_window(ctx: LowerCtx):
@@ -311,13 +325,10 @@ def _add_sub(ctx: "LowerCtx", a, b, sub: bool) -> Column:
     lowering shares). date - date already yields an interval natively."""
     ca, cb = _c(a, ctx), _c(b, ctx)
     out = (ca - cb) if sub else (ca + cb)
-    if ctx.sdf is None:
+    fields = _probe_fields(ctx, ca, cb)
+    if fields is None:
         return out
-    try:
-        fa, fb = ctx.sdf.select(ca.alias("__l__"), cb.alias("__r__")).schema
-        ta, tb = fa.dataType, fb.dataType
-    except Exception:
-        return out
+    ta, tb = fields[0].dataType, fields[1].dataType
     pair = (
         (isinstance(ta, T.DateType) and isinstance(tb, T.DayTimeIntervalType))
         or (isinstance(tb, T.DateType) and isinstance(ta, T.DayTimeIntervalType))
@@ -337,17 +348,14 @@ def _pow(ctx: "LowerCtx", a, b) -> Column:
     eagerly would cost a data scan)."""
     ca, cb = _c(a, ctx), _c(b, ctx)
     out = F.pow(ca, cb)
-    if ctx.sdf is None:
+    fields = _probe_fields(ctx, ca, cb)
+    if fields is None:
         return out
-    try:
-        sch = ctx.sdf.select(ca.alias("__pa__"), cb.alias("__pb__")).schema
-        ta, tb = sch[0].dataType, sch[1].dataType
-    except Exception:
-        return out
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    if isinstance(ta, integral) and isinstance(tb, integral):
+    ta, tb = fields[0].dataType, fields[1].dataType
+    if isinstance(ta, T.IntegralType) and isinstance(tb, T.IntegralType):
         return out.cast("long")
-    if isinstance(ta, (T.FloatType,) + integral) and isinstance(tb, (T.FloatType,) + integral):
+    f32_or_int = (T.FloatType, T.IntegralType)
+    if isinstance(ta, f32_or_int) and isinstance(tb, f32_or_int):
         return out.cast("float")  # no f64 operand: stay f32
     return out
 
@@ -377,120 +385,82 @@ def _div_trunc_exact(v: Column, divisor: int) -> Column:
     return ((v - v % d).cast("decimal(38,0)") / d).cast("long")
 
 
-_UNIT_SHORT = {"millisecond": "ms", "microsecond": "us", "nanosecond": "ns"}
+def _count_to_us(v: Column, unit: str) -> Column:
+    """A long COUNT of ``unit`` -> µs, the physical storage unit (ns
+    counts truncate toward zero)."""
+    if unit == "ns":
+        return _div_trunc_exact(v, 1_000)
+    return v * F.lit(dt.US_PER_UNIT[unit])
 
 
 def _cast(ctx: "LowerCtx", a, dtype) -> Column:
-    """Dtype-aware cast lowering — the expression-level twin of
-    Series.cast's temporal rules (reference polars cast semantics,
-    series_test.exs:4353-4446), so ``mutate(x=cast(col, dtype))`` and
-    ``Series.cast`` can never disagree:
+    """Dtype-aware cast lowering, the one cast of the library —
+    ``Series.cast`` and ``mutate(x=cast(col, dtype))`` both lower here
+    (reference polars cast semantics, series_test.exs:4353-4446), and
+    ``_node_meta`` decides the metadata the result carries. The rules
+    that read the source's logical metadata live here:
 
-    - integer -> date/datetime/duration: the integer is an EPOCH /
-      unit COUNT in the target precision (Spark's plain cast reads
-      SECONDS — a silent 10^6 divergence)
     - datetime -> integer: epoch count in the column's LOGICAL
       precision (``dt_p`` metadata, default µs)
     - duration -> integer: count in the column's ``dur_p`` unit
+    - duration -> duration: truncation toward zero to the target unit
     - {:naive_datetime|datetime, ms} target: sub-ms truncates toward 0
+
+    The metadata-free count rules (integer -> date/datetime/duration,
+    per element of lists and per field of structs) are ``_elem_cast``'s.
 
     Source types resolve via the analysis-only ``LowerCtx.sdf`` (the
     ``_wall``/``_pow`` mechanism); without a frame Spark's plain cast
     stands — same documented degradation as computed-children tz."""
     d = dt.normalize(dtype)
     c = _c(a, ctx)
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     src_t, src_meta = None, {}
-    if ctx.sdf is not None:
-        try:
-            fld = ctx.sdf.select(c.alias("__ct__")).schema[0]
-            src_t, src_meta = fld.dataType, dict(fld.metadata or {})
-        except Exception:
-            pass
+    fields = _probe_fields(ctx, c)
+    if fields is not None:
+        src_t, src_meta = fields[0].dataType, dict(fields[0].metadata or {})
     if isinstance(a, Expr):
         # computed children carry no Spark metadata — the Expr-tree
         # inference supplies tz/dt_p/dur_p so e.g. a shifted tz column
         # still casts to the epoch count of its LOGICAL precision
         src_meta = {**_node_meta(a, ctx), **src_meta}
-
-    def unit_of(tup, default="us"):
-        u = tup[1] if len(tup) > 1 else default
-        return _UNIT_SHORT.get(u, u)
-
-    def count_to_us(v: Column, unit: str) -> Column:
-        to_us = {"ms": 1_000, "us": 1, "s": 1_000_000, "ns": None}.get(unit, 1)
-        return _div_trunc_exact(v, 1_000) if to_us is None else v * F.lit(to_us)
-
-    if isinstance(src_t, integral):
-        if d == "date":
-            return F.date_from_unix_date(c.cast("int"))
-        if isinstance(d, tuple) and d[0] in ("naive_datetime", "datetime"):
-            ts = F.timestamp_micros(count_to_us(c.cast("long"), unit_of(d)))
-            return ts.cast(T.TimestampNTZType()) if d[0] == "naive_datetime" else ts
-        if isinstance(d, tuple) and d[0] == "duration":
-            return _us_to_interval(count_to_us(c.cast("long"), unit_of(d)))
+    kind = d[0] if isinstance(d, tuple) else d
     if isinstance(src_t, (T.TimestampType, T.TimestampNTZType)) and dt.is_integer(d):
         unit = src_meta.get("dt_p", "us")
         us = F.unix_micros(c.cast(T.TimestampType()))
         if unit == "ns":
             v = us * F.lit(1_000)
         elif unit in ("ms", "s"):
-            div = F.lit(1_000 if unit == "ms" else 1_000_000)
+            div = F.lit(dt.US_PER_UNIT[unit])
             v = ((us - us % div) / div).cast("long")  # % keeps sign: trunc to 0
         else:
             v = us
         return v.cast(dt.to_spark(d))
     if isinstance(src_t, T.DayTimeIntervalType) and dt.is_integer(d):
-        unit = src_meta.get("dur_p", "us")
-        return _duration_total(ctx, a, unit).cast(dt.to_spark(d))
-    if isinstance(src_t, T.DayTimeIntervalType) and isinstance(d, tuple) and d[0] == "duration":
+        return _duration_total(ctx, a, src_meta.get("dur_p", "us")).cast(dt.to_spark(d))
+    if isinstance(src_t, T.DayTimeIntervalType) and kind == "duration":
         # precision re-cast truncates the physical time toward zero to
-        # the target unit (the reference converts the COUNT) — the
-        # Series.cast duration->duration twin; dur_p metadata rides via
-        # frame._mutate_cast_meta
-        unit = unit_of(d)
+        # the target unit (the reference converts the COUNT)
         us = _duration_total(ctx, a, "us")
-        unit_us = {"ms": 1_000, "s": 1_000_000}.get(unit)
-        if unit_us:
+        unit_us = dt.US_PER_UNIT[dt.unit_of(d)]
+        if unit_us > 1:
             us = us - us % F.lit(unit_us)  # % keeps sign: trunc toward 0
         return _us_to_interval(us)
     if (
-        isinstance(d, tuple)
-        and d[0] in ("naive_datetime", "datetime")
-        and unit_of(d) == "ms"
+        kind in ("naive_datetime", "datetime")
+        and dt.unit_of(d) == "ms"
         and src_t is not None
-        and not isinstance(src_t, integral)
+        and not isinstance(src_t, T.IntegralType)
     ):
         us = F.unix_micros(c.cast(T.TimestampType()))
         ts = F.timestamp_micros(us - us % F.lit(1_000))
-        return ts.cast(T.TimestampNTZType()) if d[0] == "naive_datetime" else ts
-    if (
-        isinstance(d, tuple)
-        and d[0] == "list"
-        and isinstance(src_t, T.ArrayType)
-        and _elem_needs_rule(src_t.elementType, dt.normalize(d[1]))
-    ):
-        # {:list, inner} casts apply the SAME temporal count rules per
-        # element (reference list_test.exs 'list of integer series to
-        # list of naive datetime'); Spark's array cast refuses these
-        inner = dt.normalize(d[1])
-        return F.transform(c, lambda x: _elem_cast(x, src_t.elementType, inner))
-    if (
-        isinstance(d, tuple)
-        and d[0] == "struct"
-        and isinstance(src_t, T.StructType)
-        and _elem_needs_rule(src_t, d)
-    ):
-        # {:struct, fields} casts apply the count rules per FIELD
-        # (struct_test.exs 'structs with integers to structs with naive
-        # datetimes'); Spark refuses struct<bigint> -> struct<timestamp>
+        return ts.cast(T.TimestampNTZType()) if kind == "naive_datetime" else ts
+    if _elem_needs_rule(src_t, d):
         return _elem_cast(c, src_t, d)
     return c.cast(dt.to_spark(d))
 
 
 def _elem_needs_rule(src_et, d) -> bool:
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    if isinstance(src_et, integral) and (
+    if isinstance(src_et, T.IntegralType) and (
         d == "date" or (isinstance(d, tuple) and d[0] in ("naive_datetime", "datetime", "duration"))
     ):
         return True
@@ -511,27 +481,20 @@ def _elem_needs_rule(src_et, d) -> bool:
 
 
 def _elem_cast(x: Column, src_et, d) -> Column:
-    """Per-element temporal cast rules for list casts — the scalar rules
-    of ``_cast`` without metadata (elements carry none: counts read µs,
-    the physical default)."""
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-
-    def count_to_us(v, unit):
-        to_us = {"ms": 1_000, "us": 1, "s": 1_000_000, "ns": None}.get(unit, 1)
-        return _div_trunc_exact(v, 1_000) if to_us is None else v * F.lit(to_us)
-
-    def unit_of(tup):
-        u = tup[1] if len(tup) > 1 else "us"
-        return _UNIT_SHORT.get(u, u)
-
-    if isinstance(src_et, integral):
+    """The temporal COUNT cast rules that need no metadata: an integer
+    is an EPOCH / unit COUNT in the target precision (Spark's plain cast
+    reads SECONDS — a silent 10^6 divergence), a datetime reads as its
+    µs epoch count. Lists apply them per element (reference
+    list_test.exs 'list of integer series to list of naive datetime'),
+    structs per field; Spark's array/struct casts refuse these."""
+    if isinstance(src_et, T.IntegralType):
         if d == "date":
             return F.date_from_unix_date(x.cast("int"))
         if isinstance(d, tuple) and d[0] in ("naive_datetime", "datetime"):
-            ts = F.timestamp_micros(count_to_us(x.cast("long"), unit_of(d)))
+            ts = F.timestamp_micros(_count_to_us(x.cast("long"), dt.unit_of(d)))
             return ts.cast(T.TimestampNTZType()) if d[0] == "naive_datetime" else ts
         if isinstance(d, tuple) and d[0] == "duration":
-            return _us_to_interval(count_to_us(x.cast("long"), unit_of(d)))
+            return _us_to_interval(_count_to_us(x.cast("long"), dt.unit_of(d)))
     if isinstance(src_et, (T.TimestampType, T.TimestampNTZType)) and dt.is_integer(d):
         return F.unix_micros(x.cast(T.TimestampType())).cast(dt.to_spark(d))
     if isinstance(src_et, T.ArrayType) and isinstance(d, tuple) and d[0] == "list":
@@ -618,7 +581,7 @@ def _node_meta(x, ctx: "LowerCtx") -> dict:
             return {}
         try:
             md = dict(sdf.schema[x.args[0]].metadata or {})
-        except Exception:
+        except KeyError:
             return {}
         return {k: md[k] for k in ("tz", "dt_p", "dur_p", "tm", "uw") if k in md}
     if op == "to_time":
@@ -638,20 +601,26 @@ def _node_meta(x, ctx: "LowerCtx") -> dict:
             return {"uw": 32} if method == "ordinal" else {}
         return {"uw": 32}
     if op == "cast":
+        # the one place that decides the labels a cast stamps (Series.cast
+        # and mutate both read it): "UTC" aliases "Etc/UTC" and is not
+        # stamped; an unknown zone raises here, eagerly; a list cast
+        # labels its time / duration leaf like the scalar cast
         d = dt.normalize(x.args[1])
+        leaf = dt.list_leaf(d)
         meta = {}
         if isinstance(d, tuple) and d[0] in ("naive_datetime", "datetime"):
-            unit = _UNIT_SHORT.get(d[1], d[1]) if len(d) > 1 else "us"
+            unit = dt.unit_of(d)
             if unit in ("ms", "ns"):
                 meta["dt_p"] = unit
             if d[0] == "datetime" and len(d) > 2 and d[2] not in ("Etc/UTC", "UTC"):
+                dt.check_tz(d[2])
                 meta["tz"] = d[2]
-        if isinstance(d, tuple) and d[0] == "duration":
-            unit = _UNIT_SHORT.get(d[1], d[1]) if len(d) > 1 else "us"
-            if unit != "us":
-                meta["dur_p"] = unit
-        if d == "time":
+        if isinstance(leaf, tuple) and leaf[0] == "duration" and dt.unit_of(leaf) != "us":
+            meta["dur_p"] = dt.unit_of(leaf)
+        if leaf == "time":
             meta["tm"] = True
+        if d == "category":
+            meta["cat"] = True
         if isinstance(d, tuple) and d[0] == "u":
             meta["uw"] = d[1]
         return meta
@@ -726,13 +695,10 @@ def _wall(ctx: "LowerCtx", a) -> Column:
     was actually inferred."""
     c = _c(a, ctx)
     tz = _node_meta(a, ctx).get("tz")
-    if not tz or tz in ("Etc/UTC", "UTC") or ctx.sdf is None:
+    if not tz or tz in ("Etc/UTC", "UTC"):
         return c
-    try:
-        fld = ctx.sdf.select(c.alias("__wall__")).schema[0]
-    except Exception:
-        return c
-    if isinstance(fld.dataType, T.TimestampType):
+    fields = _probe_fields(ctx, c)
+    if fields is not None and isinstance(fields[0].dataType, T.TimestampType):
         return F.from_utc_timestamp(c, tz)
     return c
 
@@ -756,10 +722,8 @@ def _struct_field(ctx: LowerCtx, a, name: str) -> Column:
             # spark.sql.caseSensitive=false): one analysis-time probe —
             # rare, so the per-lowering cost the static path avoids
             # doesn't return
-            try:
-                struct_t = sdf.select(c.alias("__s__")).schema["__s__"].dataType
-            except Exception:
-                struct_t = None
+            probed = _probe_fields(ctx, c)
+            struct_t = None if probed is None else probed[0].dataType
         if struct_t is not None and hasattr(struct_t, "fieldNames"):
             fields = list(struct_t.fieldNames())
             if name not in fields:
@@ -781,7 +745,8 @@ def _static_struct_type(a, sdf):
         t = sdf.schema[node.args[0]].dataType
         for fname in reversed(chain):
             t = t[fname].dataType
-    except Exception:
+    except (KeyError, TypeError):
+        # a field step can land on a non-struct type
         return None
     return t
 
@@ -800,13 +765,9 @@ def _sum_lower(ctx: "LowerCtx", a) -> Column:
     trues as an integer (series_test.exs 'sum of boolean values'; Spark
     rejects sum over booleans). Type check is analysis-only."""
     c = _c(a, ctx)
-    if ctx.sdf is not None:
-        try:
-            t = ctx.sdf.select(c.alias("__s__")).schema[0].dataType
-            if isinstance(t, T.BooleanType):
-                c = c.cast("long")
-        except Exception:
-            pass
+    fields = _probe_fields(ctx, c)
+    if fields is not None and isinstance(fields[0].dataType, T.BooleanType):
+        c = c.cast("long")
     return F.sum(c)
 
 
@@ -819,15 +780,11 @@ def _cum(aggfn, count=False):
             # cumulative_count doctest: [1, 2, 2, 3])
             return F.count(c).over(w)
         out = aggfn(c).over(w)
-        if aggfn is F.product and ctx.sdf is not None:
+        fields = _probe_fields(ctx, c) if aggfn is F.product else None
+        if fields is not None and isinstance(fields[0].dataType, T.IntegralType):
             # Spark's PRODUCT always emits double; the reference keeps
             # the integer dtype (series.ex cumulative_product: s64)
-            try:
-                t = ctx.sdf.select(c.alias("__cp__")).schema[0].dataType
-                if isinstance(t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-                    out = out.cast(t)
-            except Exception:
-                pass
+            out = out.cast(fields[0].dataType)
         # nil positions STAY nil; accumulation skips them (series.ex
         # cumulative_* doctests: [1, 2, nil, 4] -> [1, 3, nil, 7])
         return F.when(c.isNotNull(), out)
@@ -1066,18 +1023,6 @@ def _rx_quote(sep: str) -> str:
     return "\\Q" + sep + "\\E"
 
 
-_DUR_UNITS = {
-    "us": 1,
-    "microsecond": 1,
-    "ms": 1_000,
-    "millisecond": 1_000,
-    "s": 1_000_000,
-    "second": 1_000_000,
-    "ns": 1,  # multiplied below
-    "nanosecond": 1,
-}
-
-
 def _duration_total(ctx, a, precision: str = "us"):
     """INTERVAL DAY TO SECOND -> integer count of ``precision`` units,
     truncated toward zero — the reference's duration-to-integer cast
@@ -1092,9 +1037,10 @@ def _duration_total(ctx, a, precision: str = "us"):
         (((day * 24 + hour) * 60 + minute) * F.lit(60_000_000)).cast("long")
         + (sec * F.lit(1_000_000)).cast("long")
     )
-    if precision in ("ns", "nanosecond"):
+    unit = dt.unit_of(precision)
+    if unit == "ns":
         return total_us * F.lit(1_000)
-    div = _DUR_UNITS[precision]
+    div = dt.US_PER_UNIT[unit]
     if div == 1:
         return total_us
     # integer division truncating toward zero (Spark % keeps dividend
@@ -1146,20 +1092,12 @@ def _clip(ctx, a, lo, hi):
         )
     c = _c(a, ctx)
     is_float = None
-    if ctx.sdf is not None:
-        try:
-            t = ctx.sdf.select(c.alias("__cl__")).schema[0].dataType
-            numeric = (
-                T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                T.FloatType, T.DoubleType, T.DecimalType,
-            )
-            if not isinstance(t, numeric):
-                raise ValueError(f"Explorer.Series.clip/3 not implemented for dtype {t.simpleString()}")
-            is_float = isinstance(t, (T.FloatType, T.DoubleType))
-        except ValueError:
-            raise
-        except Exception:
-            pass
+    fields = _probe_fields(ctx, c)
+    if fields is not None:
+        t = fields[0].dataType
+        if not isinstance(t, T.NumericType):
+            raise ValueError(f"Explorer.Series.clip/3 not implemented for dtype {t.simpleString()}")
+        is_float = isinstance(t, (T.FloatType, T.DoubleType))
     clipped = F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
     if is_float:
         # NaN pass-through only when the column is KNOWN float: casting a

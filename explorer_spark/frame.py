@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import dtypes as dt
-from .expr import AGG_OPS, Expr, LowerCtx, col, lit
+from .expr import AGG_OPS, Expr, LowerCtx, _probe_fields, col, lit
 
 ORDER_COL = "__row_order__"
 
@@ -171,13 +171,12 @@ class DataFrame:
                 continue
             d = dt.from_spark(fld.dataType)
             # duration precision rides as column metadata (intervals are
-            # physically µs; Series.cast duration->duration stamps the
-            # logical precision, series.py)
+            # physically µs; a cast stamps the logical precision,
+            # expr._node_meta)
             if isinstance(d, tuple) and d[0] == "duration" and fld.metadata.get("dur_p"):
                 d = ("duration", fld.metadata["dur_p"])
             # logical datetime precision (ms/ns over physical µs) and the
             # time zone of {:datetime, p, tz} ride the same way
-            # (Series._cast_datetime_meta stamps them)
             if isinstance(d, tuple) and d[0] == "naive_datetime" and fld.metadata.get("dt_p"):
                 d = ("naive_datetime", fld.metadata["dt_p"])
             if isinstance(d, tuple) and d[0] == "datetime" and (
@@ -185,9 +184,8 @@ class DataFrame:
             ):
                 d = ("datetime", fld.metadata.get("dt_p", d[1]), fld.metadata.get("tz", d[2]))
             # category is physically a string column; cast/from_list/
-            # categorise stamp the marker (Series._stamp_col_meta) so
-            # dtype introspection and replace/2's code-decode branch see
-            # the logical dtype
+            # categorise stamp the marker so dtype introspection and
+            # replace/2's code-decode branch see the logical dtype
             if d == "string" and fld.metadata.get("cat"):
                 d = "category"
             # time-of-day is an ns-since-midnight long with the "tm"
@@ -330,7 +328,7 @@ class DataFrame:
         integral = {
             f.name
             for f in self._sdf.schema.fields
-            if isinstance(f.dataType, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
+            if isinstance(f.dataType, T.IntegralType)
         }
         out = {}
         for c in self.names:
@@ -751,11 +749,17 @@ class DataFrame:
         probe lowers the expression against this frame's plain context;
         shapes that need the grouped machinery skip the early check and
         fail (or work) downstream."""
+        ctx = self._ctx()
         try:
-            c = p.lower(self._ctx())
-            dtp = self._sdf.select(c.alias("__p__")).schema["__p__"].dataType
-        except Exception:
+            c = p.lower(ctx)
+        except (ValueError, NotImplementedError):
+            # what the lowering raises for shapes the downstream
+            # machinery rewrites first (row order, frame-level ops)
             return
+        fields = _probe_fields(ctx, c)
+        if fields is None:
+            return
+        dtp = fields[0].dataType
         if not isinstance(dtp, T.BooleanType):
             got = dt.from_spark(dtp)
             rend = (
@@ -933,63 +937,20 @@ class DataFrame:
             return out.select(cols)
         return out
 
-    @staticmethod
-    def _mutate_cast_meta(exprs: dict) -> dict:
-        """Column metadata a top-level ``mutate(x=cast(col, dtype))``
-        must stamp — the expression-level twin of Series.cast's
-        metadata stamps, now that the cast LOWERING itself applies the
-        matching value semantics (expr._cast): ``tz`` for
-        {:datetime, p, tz} (instant unchanged, zone label; validated
-        eagerly), ``dt_p`` for ms/ns logical datetime precision (ms
-        truncation is real in the lowering; ns is logical-only, the
-        same trade Series.cast makes), ``dur_p`` for non-µs duration
-        units."""
-        from .series import _check_tz
-
-        stamps = {}
-        for name, e in exprs.items():
-            if not (isinstance(e, Expr) and e.op == "cast"):
-                continue
-            d = dt.normalize(e.args[1])
-            if not isinstance(d, tuple):
-                continue
-            meta = {}
-            if d[0] in ("naive_datetime", "datetime"):
-                unit = d[1] if len(d) > 1 else "us"
-                unit = {"millisecond": "ms", "microsecond": "us", "nanosecond": "ns"}.get(unit, unit)
-                if unit in ("ms", "ns"):
-                    meta["dt_p"] = unit
-            if d[0] == "datetime" and len(d) > 2 and d[2] not in ("Etc/UTC", "UTC"):
-                _check_tz(d[2])
-                meta["tz"] = d[2]
-            if d[0] == "duration":
-                unit = d[1] if len(d) > 1 else "us"
-                unit = {"millisecond": "ms", "microsecond": "us", "nanosecond": "ns"}.get(unit, unit)
-                if unit != "us":
-                    meta["dur_p"] = unit
-            if meta:
-                stamps[name] = meta
-        return stamps
-
     def _mutate_meta_stamps(self, exprs: dict) -> dict:
-        """Stamps for mutate outputs: top-level casts (eagerly
-        validated, ``_mutate_cast_meta``) plus the Expr-tree metadata
-        inference (``expr._node_meta``) for COMPUTED temporal children —
-        ``mutate(t2 = col(ts) + dur)`` keeps the zone/precision of
-        ``ts``, so a chained ``col("t2").hour()`` (or a datetime->int
-        cast) still reads the logical dtype, exactly as the reference's
-        LazySeries carries dtype per node (lazy_series.ex:216-236)."""
+        """Stamps for mutate outputs, from the Expr-tree metadata
+        inference (``expr._node_meta``): a cast stamps its target's
+        labels (an unknown zone raises here, before lowering), and
+        COMPUTED temporal children keep theirs — ``mutate(t2 = col(ts)
+        + dur)`` keeps the zone/precision of ``ts``, so a chained
+        ``col("t2").hour()`` (or a datetime->int cast) still reads the
+        logical dtype, exactly as the reference's LazySeries carries
+        dtype per node (lazy_series.ex:216-236)."""
         from .expr import _node_meta
 
-        stamps = self._mutate_cast_meta(exprs)
         ctx = LowerCtx(sdf=self._sdf)
-        for name, e in exprs.items():
-            if name in stamps or not isinstance(e, Expr):
-                continue
-            m = _node_meta(e, ctx)
-            if m:
-                stamps[name] = m
-        return stamps
+        metas = {name: _node_meta(e, ctx) for name, e in exprs.items() if isinstance(e, Expr)}
+        return {name: m for name, m in metas.items() if m}
 
     def _mutate_all(self, exprs: dict) -> "DataFrame":
         if (

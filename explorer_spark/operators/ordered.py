@@ -347,7 +347,7 @@ def cumulative(
         # Spark's PRODUCT always emits double; integer series keep their
         # dtype (series.ex cumulative_product doctest: s64)
         vt = s.schema[value_col].dataType
-        if isinstance(vt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        if isinstance(vt, T.IntegralType):
             combined = combined.cast(vt)
     if kind != "count":
         # nil positions STAY nil; accumulation skips them (series.ex

@@ -641,7 +641,7 @@ def q_at_every(spark, sf_dir):
 )
 def q_tz_wall_clock(spark, sf_dir):
     """{:datetime, us, tz} end to end: a mutate-level cast stamps the
-    zone (frame._mutate_cast_meta), and expression-level wall-clock
+    zone (expr._node_meta), and expression-level wall-clock
     extraction (expr._wall, reference shared.ex:78-79) reads LOCAL
     fields — hour/day_of_week here are America/New_York wall clock,
     spanning the EST->EDT jump in the 2024 event range. The shift is a
@@ -702,7 +702,7 @@ def q_tz_derived_wall(spark, sf_dir):
 )
 def q_epoch_ms_counts(spark, sf_dir):
     """{:naive_datetime, ms} precision: cast to ms (sub-ms truncates
-    toward zero, Series._cast_datetime_meta) then to s64 — the integer
+    toward zero, expr._cast) then to s64 — the integer
     is the epoch COUNT in the column's logical precision (reference
     polars cast semantics), not Spark's timestamp->bigint seconds."""
     ev = _t(spark, sf_dir, "events")

@@ -21,24 +21,14 @@ from .expr import Expr, LowerCtx, col, lit
 from .frame import ORDER_COL, DataFrame
 
 
-from .expr import _div_trunc_exact, _us_to_interval  # noqa: E402  (shared with the cast lowering)
-
-
-def _dur_unit(target) -> str:
-    """Normalize a duration dtype's precision to the short unit form."""
-    unit = target[1] if isinstance(target, tuple) and len(target) > 1 else "us"
-    return {"millisecond": "ms", "microsecond": "us", "nanosecond": "ns", "second": "s"}.get(unit, unit)
-
-
-def _list_leaf(d):
-    """Innermost element dtype of a (possibly nested) list dtype."""
-    while isinstance(d, tuple) and d[0] == "list":
-        d = d[1]
-    return d
+def _timedelta_count(v, d) -> int:
+    """A python timedelta as the count of duration dtype ``d``'s unit."""
+    us = v.days * 86_400_000_000 + v.seconds * 1_000_000 + v.microseconds
+    return int(us / dt.US_PER_UNIT[dt.unit_of(d)])
 
 
 def _list_leaf_kind(d) -> str | None:
-    leaf = _list_leaf(d)
+    leaf = dt.list_leaf(d)
     if leaf == "time":
         return "time"
     if isinstance(leaf, tuple) and leaf[0] == "duration":
@@ -67,10 +57,6 @@ def _stamp_col_meta(s: "Series", meta: dict) -> "Series":
     mismatched."""
     sdf = s._frame._sdf.withMetadata(s.name, meta)
     return Series(s._frame._replace(sdf, has_order=s._frame._has_order), s.name)
-
-
-def _stamp_dur_precision(s: "Series", unit: str) -> "Series":
-    return _stamp_col_meta(s, {"dur_p": unit})
 
 
 def _nested_special_float(values) -> bool:
@@ -246,17 +232,6 @@ def _tz_key(tzinfo) -> str:
     return {"UTC": "Etc/UTC"}.get(k, k)
 
 
-def _check_tz(tz: str) -> None:
-    """Eager zone validation (the reference raises ArgumentError for an
-    unknown zone at cast time, not lazily at execution)."""
-    try:
-        from zoneinfo import ZoneInfo
-
-        ZoneInfo(tz)
-    except Exception:
-        raise ValueError(f"unknown time zone {tz!r}") from None
-
-
 # Wall-clock temporal reads on tz-stamped datetimes (year/hour/strftime/
 # to_date/...) shift into the column's zone at the EXPRESSION layer
 # (expr._wall reads the `tz` column metadata via LowerCtx.sdf) — the same
@@ -427,14 +402,8 @@ class Series:
                 # timedelta values as µs counts at the boundary
                 import datetime as _dtm
 
-                unit = _dur_unit(nd_)
-                per_us = {"ms": 1_000, "us": 1, "ns": 0.001, "s": 1_000_000}.get(unit, 1)
                 values = [
-                    (
-                        int((v.days * 86_400_000_000 + v.seconds * 1_000_000 + v.microseconds) / per_us)
-                        if isinstance(v, _dtm.timedelta)
-                        else v
-                    )
+                    _timedelta_count(v, nd_) if isinstance(v, _dtm.timedelta) else v
                     for v in values
                 ]
                 _dur_target, dtype = nd_, ("s", 64)
@@ -456,7 +425,6 @@ class Series:
                         f"nested {nd_!r} is not supported: time/duration list "
                         "elements decode one nesting level deep"
                     )
-                leaf = _list_leaf(nd_)
 
                 def _conv(v, d):
                     if v is None:
@@ -466,12 +434,7 @@ class Series:
                     if d == "time" and isinstance(v, _dtm.time):
                         return dt.time_to_ns(v)
                     if isinstance(d, tuple) and d[0] == "duration" and isinstance(v, _dtm.timedelta):
-                        unit = _dur_unit(d)
-                        per_us = {"ms": 1_000, "us": 1, "ns": 0.001, "s": 1_000_000}.get(unit, 1)
-                        return int(
-                            (v.days * 86_400_000_000 + v.seconds * 1_000_000 + v.microseconds)
-                            / per_us
-                        )
+                        return _timedelta_count(v, d)
                     return v
 
                 values = [_conv(v, nd_) for v in values]
@@ -481,7 +444,7 @@ class Series:
                     _tm_stamp = True
                 dtype = _list_counts_shape(nd_)
             elif isinstance(nd_, tuple) and nd_[0] in ("naive_datetime", "datetime"):
-                unit = _dur_unit(nd_)
+                unit = dt.unit_of(nd_)
                 tz = nd_[2] if nd_[0] == "datetime" and len(nd_) > 2 else None
                 if unit in ("ms", "ns") or (tz and tz != "Etc/UTC"):
                     # ingest at physical µs (ints are COUNTS in the target
@@ -876,7 +839,10 @@ class Series:
         return "none"
 
     def cast(self, dtype) -> "Series":
-        cur = self.dtype
+        """Cast to ``dtype`` — the query-level ``cast`` node applied to
+        this series: ``expr._cast`` holds the value rules and
+        ``expr._node_meta`` the dtype labels, so ``Series.cast`` and
+        ``mutate(x=cast(col, dtype))`` agree."""
         try:
             target = dt.normalize(dtype)
             dt.to_spark(target)
@@ -889,172 +855,10 @@ class Series:
         if target == "null":
             # any series casts to :null — every value nil
             # (series_test.exs 'integer series to null')
-            out = self._apply(Expr("null_of", self._c()))
-            return out
-        if target == "category":
-            # physically a string column; the marker metadata makes
-            # dtype report :category and enables replace/2's code decode
-            out = self._apply(Expr("cast", self._c(), "string"))
-            return _stamp_col_meta(out, {"cat": True})
-        if target == "time":
-            # int -> time: the integer IS the ns-since-midnight count
-            # (reference series_test.exs:4361-4378); physical storage is
-            # the same long, the "tm" marker makes it logical :time
-            if cur == "time":
-                return self
-            if dt.is_integer(cur):
-                out = self._apply(Expr("cast", self._c(), ("s", 64)))
-                return _stamp_col_meta(out, {"tm": True})
-        if cur == "time" and dt.is_integer(target):
-            # time -> int: the ns count (marker drops with the new column)
-            return self._apply(Expr("cast", self._c(), target))
-        if isinstance(target, tuple) and target[0] == "list":
-            out = self._apply(Expr("cast", self._c(), dtype))
-            k = _list_leaf_kind(target)
-            if k == "time":
-                return _stamp_col_meta(out, {"tm": True})
-            if k == "duration":
-                unit = _dur_unit(_list_leaf(target))
-                if unit != "us":
-                    # element intervals are physically µs; the logical
-                    # unit rides the column metadata like the scalar cast
-                    return _stamp_col_meta(out, {"dur_p": unit})
-            return out
-        if isinstance(cur, tuple) and cur[0] == "duration" and dt.is_integer(target):
-            # duration -> integer yields the count in the duration's
-            # precision unit (reference shared.ex:12-22), not Spark's
-            # interval-to-long seconds
-            total = Expr("duration_total", self._c(), cur[1])
-            return self._apply(Expr("cast", total, target))
-        if (
-            isinstance(cur, tuple) and cur[0] == "duration"
-            and isinstance(target, tuple) and target[0] == "duration"
-        ):
-            # precision re-cast: truncate the physical time toward zero
-            # to the target unit (the reference converts the COUNT, which
-            # drops sub-unit detail) and stamp the logical precision as
-            # column metadata so dtype introspection and a later
-            # duration->integer cast use the NEW unit
-            from . import expr as _expr
-            from .expr import raw as _raw
-
-            unit = _dur_unit(target)
-            us = _expr._duration_total(LowerCtx(), self._c(), "us")
-            unit_us = {"ms": 1_000, "s": 1_000_000}.get(unit)
-            if unit_us:
-                # % keeps the dividend sign, so this truncates toward zero
-                us = us - us % F.lit(unit_us)
-            return _stamp_dur_precision(self._apply(_raw(_us_to_interval(us))), unit)
-        if dt.is_integer(cur) and isinstance(target, tuple) and target[0] == "duration":
-            # integer -> duration (reference cast: the integer IS the
-            # count in the target precision). Build a real
-            # DayTimeIntervalType so temporal arithmetic, precision
-            # casts, and parquet round-trips all work (the long-count
-            # rendering supports none of them).
-            from .expr import raw as _raw
-
-            unit = _dur_unit(target)
-            to_us = {"ms": 1_000, "us": 1, "s": 1_000_000, "ns": None}.get(unit, 1)
-            v = F.col(self.name).cast("long")
-            us = _div_trunc_exact(v, 1_000) if to_us is None else v * F.lit(to_us)
-            return _stamp_dur_precision(self._apply(_raw(_us_to_interval(us))), unit)
-        if isinstance(target, tuple) and target[0] in ("naive_datetime", "datetime"):
-            unit = _dur_unit(target)
-            tz = target[2] if (target[0] == "datetime" and len(target) > 2) else None
-            if unit in ("ms", "ns") or (tz and tz != "Etc/UTC"):
-                return self._cast_datetime_meta(cur, target, unit, tz)
-        if isinstance(cur, tuple) and cur[0] in ("naive_datetime", "datetime") and dt.is_integer(target):
-            # datetime -> integer is the epoch COUNT in the column's
-            # logical precision (polars cast semantics — the exact
-            # inverse of the int->datetime cast above), NOT Spark's
-            # timestamp->bigint SECONDS
-            from pyspark.sql import types as T
-
-            from .expr import raw as _raw
-
-            unit = _dur_unit(cur)
-            us = F.unix_micros(F.col(self.name).cast(T.TimestampType()))
-            if unit == "ns":
-                v = us * F.lit(1_000)
-            elif unit in ("ms", "s"):
-                d = F.lit(1_000 if unit == "ms" else 1_000_000)
-                v = ((us - us % d) / d).cast("long")  # truncates toward zero
-            else:
-                v = us
-            return self._apply(_raw(v.cast(dt.to_spark(target))))
-        if dt.is_integer(cur):
-            # integer -> temporal (reference series_test.exs:4353-4394):
-            # Spark refuses BIGINT->DATE/TIMESTAMP casts, but the
-            # reference defines them as epoch offsets — date: days since
-            # epoch; naive_datetime/datetime: count of target-precision
-            # units since epoch. (int -> time needs no special case: time
-            # is carried as an ns-since-midnight long already.)
-            if target == "date":
-                from .expr import raw as _raw
-
-                return self._apply(_raw(F.date_from_unix_date(F.col(self.name).cast("int"))))
-            if isinstance(target, tuple) and target[0] in ("naive_datetime", "datetime"):
-                from pyspark.sql import types as T
-
-                from .expr import raw as _raw
-
-                unit = target[1] if len(target) > 1 else "us"
-                to_us = {"ms": 1_000, "us": 1, "ns": None}.get(
-                    {"millisecond": "ms", "microsecond": "us", "nanosecond": "ns"}.get(unit, unit), 1
-                )
-                v = F.col(self.name).cast("long")
-                micros = _div_trunc_exact(v, 1_000) if to_us is None else v * F.lit(to_us)
-                ts = F.timestamp_micros(micros)
-                if target[0] == "naive_datetime":
-                    ts = ts.cast(T.TimestampNTZType())  # session tz is UTC
-                return self._apply(_raw(ts))
+            return self._apply(Expr("null_of", self._c()))
+        if target == "time" and self.dtype == "time":
+            return self
         return self._apply(Expr("cast", self._c(), dtype))
-
-    def _cast_datetime_meta(self, cur, target, unit: str, tz: str | None) -> "Series":
-        """naive_datetime/datetime casts with logical precision (ms/ns)
-        or a time zone (reference ``{:naive_datetime, p}`` /
-        ``{:datetime, p, tz}``, shared.ex:78-79). Physical storage stays
-        µs TimestampNTZ/Timestamp (SURVEY §1.2):
-
-        - ms: sub-ms detail truncates toward zero (the reference stores
-          ms COUNTS — string->ms test series_test.exs:4446 shows .000);
-        - ns: logical only — values stay µs-resolved (documented
-          truncation, same trade the duration column makes);
-        - tz: the INSTANT is unchanged (zone relabeling, polars cast
-          semantics); the zone stamps as column metadata, dtypes reports
-          it, and wall-clock extraction/strftime read through it
-          (``expr._wall``). Re-casting to ``{:datetime, p, "Etc/UTC"}``
-          drops the stamp.
-
-        An integer source is the epoch COUNT in the target unit, exactly
-        like the plain int->datetime cast."""
-        from pyspark.sql import types as T
-
-        from .expr import raw as _raw
-
-        if tz:
-            _check_tz(tz)
-        kind = target[0]
-        if dt.is_integer(cur):
-            to_us = {"ms": 1_000, "us": 1, "s": 1_000_000, "ns": None}.get(unit, 1)
-            v = F.col(self.name).cast("long")
-            micros = _div_trunc_exact(v, 1_000) if to_us is None else v * F.lit(to_us)
-            ts = F.timestamp_micros(micros)
-        else:
-            ts = F.col(self.name).cast(T.TimestampType())
-            if unit == "ms":
-                us = F.unix_micros(ts)
-                # % keeps the dividend sign: truncation toward zero
-                ts = F.timestamp_micros(us - us % F.lit(1_000))
-        if kind == "naive_datetime":
-            ts = ts.cast(T.TimestampNTZType())  # session tz is UTC
-        out = self._apply(_raw(ts))
-        meta = {}
-        if unit in ("ms", "ns"):
-            meta["dt_p"] = unit
-        if tz and tz != "Etc/UTC":
-            meta["tz"] = tz
-        return _stamp_col_meta(out, meta) if meta else out
 
     def filter(self, fn: Callable[[Expr], Expr]) -> "Series":
         nf = self._frame.filter_with(fn(self._c()))

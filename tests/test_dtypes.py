@@ -468,6 +468,79 @@ def test_expression_level_cast_matches_series_cast(spark):
     assert d6.mutate(c=f.cast(col("ms"), ("s", 64))).to_columns()["c"] == [1000]
 
 
+def _agreement_sources():
+    import datetime as dtm
+
+    return {
+        "s64": ([0, 1_500_000, None, -1_500], ("s", 64)),
+        "string": (["2024-01-02 03:04:05.123456", None], "string"),
+        "date": ([dtm.date(2024, 1, 2), None], "date"),
+        "naive_us": ([dtm.datetime(2024, 1, 2, 3, 4, 5, 123456), None], ("naive_datetime", "us")),
+        "datetime_zone": (
+            [dtm.datetime(2024, 1, 2, 3, 4, 5, 123456, tzinfo=dtm.timezone.utc), None],
+            ("datetime", "us", "America/New_York"),
+        ),
+        "duration_ms": ([1_500, None, -2], ("duration", "ms")),
+        "time": ([dtm.time(1, 2, 3, 456789), None], "time"),
+        "list_s64": ([[1, 2], None, []], ("list", ("s", 64))),
+    }
+
+
+_AGREEMENT_TARGETS = [
+    "date",
+    ("naive_datetime", "ms"),
+    ("naive_datetime", "us"),
+    ("naive_datetime", "ns"),
+    ("datetime", "us", "Etc/UTC"),
+    ("datetime", "ns", "Etc/UTC"),
+    ("datetime", "us", "UTC"),
+    ("datetime", "ns", "UTC"),
+    ("datetime", "us", "Europe/Paris"),
+    ("datetime", "ns", "Europe/Paris"),
+    ("duration", "ms"),
+    ("duration", "us"),
+    ("duration", "ns"),
+    ("s", 64),
+    "category",
+    "time",
+    ("list", ("duration", "ms")),
+]
+
+
+_AGREEMENT_SERIES = {}  # source name -> Series, built once per session
+
+
+def _cast_outcome(build):
+    """(dtype, values) of a cast, or the fact that it raised."""
+    try:
+        out = build()
+        return out.dtype, out.to_list()
+    except Exception:  # noqa: BLE001 — both sides must raise alike
+        return "raised"
+
+
+@pytest.mark.parametrize("target", _AGREEMENT_TARGETS, ids=str)
+@pytest.mark.parametrize("source", list(_agreement_sources()))
+def test_series_cast_and_mutate_cast_agree(spark, source, target):
+    """``Series.cast(d)`` and ``mutate(out = cast(col, d))`` report the
+    same dtype and values, or both raise — one value rule (expr._cast)
+    and one metadata rule (expr._node_meta) serve both."""
+    from explorer_spark import functions as f
+    from explorer_spark.functions import col
+    from explorer_spark.series import Series
+
+    if source not in _AGREEMENT_SERIES:
+        values, dtype = _agreement_sources()[source]
+        _AGREEMENT_SERIES[source] = Series.from_list(values, dtype=dtype, spark=spark)
+    s = _AGREEMENT_SERIES[source]
+    via_series = _cast_outcome(lambda: s.cast(target))
+
+    def via_mutate():
+        return s.to_frame().mutate(out=f.cast(col(s.name), target))["out"]
+
+    assert via_series == _cast_outcome(via_mutate)
+
+
 def test_list_cast_temporal_count_rules(spark):
     """{:list, inner} casts apply the temporal COUNT rules per element
     (reference list_test.exs 'list of integer series to list of naive
