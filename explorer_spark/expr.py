@@ -405,6 +405,8 @@ def _cast(ctx: "LowerCtx", a, dtype) -> Column:
     - duration -> integer: count in the column's ``dur_p`` unit
     - duration -> duration: truncation toward zero to the target unit
     - {:naive_datetime|datetime, ms} target: sub-ms truncates toward 0
+    - time -> date/datetime/duration: ``ValueError``, eagerly (a time
+      is ns since midnight, not an epoch count)
 
     The metadata-free count rules (integer -> date/datetime/duration,
     per element of lists and per field of structs) are ``_elem_cast``'s.
@@ -424,6 +426,10 @@ def _cast(ctx: "LowerCtx", a, dtype) -> Column:
         # still casts to the epoch count of its LOGICAL precision
         src_meta = {**_node_meta(a, ctx), **src_meta}
     kind = d[0] if isinstance(d, tuple) else d
+    if src_meta.get("tm") and kind in ("date", "naive_datetime", "datetime", "duration"):
+        # a :time value is ns since midnight, not an epoch or duration
+        # count: reading it as one gives a silently wrong instant
+        raise ValueError(f"cannot cast :time to {dtype!r}")
     if isinstance(src_t, (T.TimestampType, T.TimestampNTZType)) and dt.is_integer(d):
         unit = src_meta.get("dt_p", "us")
         us = F.unix_micros(c.cast(T.TimestampType()))

@@ -1054,10 +1054,10 @@ class DataFrame:
             state["n"] += 1
             return f"__m{state['n']}__"
 
-        # fuse value-statistic ranks: all min/max/average/dense ranks over
-        # the same plain column share ONE distinct-value kernel and ONE
-        # join back (operators/ordered.py rank_columns) instead of a
-        # kernel chain per expression
+        # fuse value-statistic ranks: every min/max/average/dense rank of a
+        # plain column shares ONE distinct-value kernel per (descending,
+        # Spark type) group (operators/ordered.py value_ranks) instead of
+        # a kernel chain per expression
         rank_fused: dict = {}
         quantile_qs: dict = {}
         def _prescan(e):
@@ -1075,35 +1075,18 @@ class DataFrame:
 
         for e in exprs:
             _prescan(e)
-        # fusion order: multi-method ranks over ONE column share a kernel
-        # (rank_columns); single-method ranks over SEVERAL same-typed
-        # columns share one melted kernel (rank_columns_multi) — e.g. a
-        # spearman mutate ranking two columns runs ONE kernel total
-        multi_groups: dict = {}
+        # the melt array needs one Spark type: e.g. a spearman mutate
+        # ranking two columns, or three methods over one column, runs ONE
+        # kernel and ONE routing probe
+        rank_groups: dict = {}
         for (vname, desc), meths in rank_fused.items():
-            if len(meths) == 1:
-                (m,) = meths
-                dtype = state["sdf"].schema[vname].dataType.simpleString()
-                multi_groups.setdefault((desc, m, dtype), []).append(vname)
-            else:
-                specs = {}
-                for m in meths:
-                    name = tmp()
-                    meths[m] = name
-                    specs[name] = m
-                state["sdf"] = ordk.rank_columns(state["sdf"], None, vname, specs, desc, n_hint=n_hint)
-        for (desc, m, _dtype), vnames in multi_groups.items():
-            if len(vnames) == 1:
-                name = tmp()
-                rank_fused[(vnames[0], desc)][m] = name
-                state["sdf"] = ordk.global_rank(state["sdf"], None, vnames[0], name, m, desc, n_hint=n_hint)
-            else:
-                spec = {}
-                for vname in vnames:
-                    name = tmp()
-                    rank_fused[(vname, desc)][m] = name
-                    spec[vname] = name
-                state["sdf"] = ordk.rank_columns_multi(state["sdf"], spec, method=m, descending=desc, n_hint=n_hint)
+            dtype = state["sdf"].schema[vname].dataType.simpleString()
+            spec = rank_groups.setdefault((desc, dtype), {}).setdefault(vname, {})
+            for m in meths:
+                meths[m] = tmp()
+                spec[meths[m]] = m
+        for (desc, _dtype), specs in rank_groups.items():
+            state["sdf"] = ordk.value_ranks(state["sdf"], specs, desc, n_hint=n_hint)
 
         def as_col(e) -> str:
             """Materialize a pure (already rewritten) expr as a column name."""
@@ -3335,10 +3318,10 @@ class DataFrame:
             # ONE multi-column distributed rank kernel — no single-partition
             # window, and no per-column kernel chain (ranks run on the
             # double-cast values, same as pandas/polars float matrices)
-            from .operators.ordered import rank_columns_multi
+            from .operators.ordered import value_ranks
 
             sdf = sdf.withColumns({c: F.col(c).cast("double") for c in cols})
-            sdf = rank_columns_multi(sdf, {c: c for c in cols}, method="average")
+            sdf = value_ranks(sdf, {c: {c: "average"} for c in cols})
         aggs = []
         for a in cols:
             for b in cols:

@@ -25,11 +25,15 @@ same semantics with bounded parallel stages:
    driver-computed prefix back as a literal broadcast; bounded ops
    (shift, peaks, rolling) duplicate the <= k boundary rows into the
    neighbour bucket and drop them after (`with_boundary_context`).
-4. **Rank**: per-VALUE statistics (count, count-prefix, dense position)
-   computed on the distinct-value table with the same kernel, then an
-   equi-join back on the value — ties need no colocation, and every
-   method (min/max/average/dense) derives from one pass
-   (`rank_columns`).
+4. **Value rank**: one distinct-value kernel (`value_ranks`). Any
+   number of same-typed columns melt into one ``(column id, value,
+   count)`` table (`_value_counts`); one prefix pass over it
+   (`_value_prefix`: a per-column window when summary-sized, else the
+   range-partition + driver per-partition-offset pattern of 1) yields
+   count-prefix and dense position; every min/max/average/dense rank
+   derives from those (`_rank_expr`) before one equi-join back per
+   column, so ties need no colocation. The whole-frame quantile
+   fallback reads the same prefix (`_cum_value_counts`).
 
 The only sequential work anywhere is a driver loop over summary rows
 whose count is #partitions or ceil(n / 2^18) — the same bound Spark
@@ -110,15 +114,18 @@ BC_BYTES_MAX = 48 * 1024 * 1024
 
 
 def _rank_small_ok(n_distinct: int, est_bytes: int | None, approx: bool = False) -> bool:
-    """May this value table take the single-window small path? Beyond the
-    unconditional SMALL_VALS_MAX, allow it up to the BROADCAST bound
-    (2^21 rows AND estimated bytes under BC_BYTES_MAX): a rank table the
-    pipeline is prepared to hand every executor as a broadcast is by the
-    same argument small enough for one window task — which replaces the
-    range-sample + shuffle + checkpoint + stats-job kernel (3 driver
-    barriers) with zero extra jobs. ``approx`` shaves 10% off the row
-    bound to absorb approx_count_distinct's error; a mis-route in either
-    direction is still CORRECT, only differently priced."""
+    """May this column's value table take :func:`_value_prefix`'s
+    single-window small path (:func:`value_ranks` asks once per column)?
+    Beyond the unconditional SMALL_VALS_MAX, allow it up to the
+    BROADCAST bound (2^21 rows AND estimated bytes under BC_BYTES_MAX):
+    a rank table the pipeline is prepared to hand every executor as a
+    broadcast is by the same argument small enough for one window task —
+    which replaces the range-sample + shuffle + checkpoint + stats-job
+    kernel (3 driver barriers) with zero extra jobs. So forcing the range
+    kernel on a test-sized table takes BOTH gates zeroed. ``approx``
+    shaves 10% off the row bound to absorb approx_count_distinct's
+    error; a mis-route in either direction is still CORRECT, only
+    differently priced."""
     if n_distinct <= SMALL_VALS_MAX:
         return True
     bound = int(0.9 * (1 << 21)) if approx else (1 << 21)
@@ -441,191 +448,194 @@ def strip_boundary_context(sdf: SDF) -> SDF:
 
 
 # ---------------------------------------------------------------------------
-# rank
+# rank: one distinct-value kernel
 # ---------------------------------------------------------------------------
 
 
-def rank_columns(
-    sdf: SDF,
-    order_col: str | None,
-    value_col: str,
-    methods: dict[str, str],
-    descending: bool = False,
-    seed: int | None = None,
-    n_hint: int | None = None,
-) -> SDF:
-    """Attach one or more global-rank columns of ``value_col`` in a
-    single pass per family (reference series.ex rank/1-3; methods
-    ordinal/min/max/dense/average/random).
-
-    ordinal/random need per-row positions and go through the full-frame
-    global index. min/max/average/dense need only per-VALUE statistics:
-    the frame never range-shuffles — one map-combined groupBy builds the
-    distinct-value table, ONE kernel over it yields count, count-prefix
-    and dense position together (local pid-window cumsum + driver-side
-    per-partition offsets), and every requested method derives from
-    those three columns before a single equi-join back on the value.
-    Ties need no colocation."""
-    out = sdf
-    c = F.col(value_col)
-    # nulls order LAST so non-null rows take ranks 1..n_valid, then the
-    # mask nils them out — reference rank/2 keeps nils as nil without
-    # consuming ranks (series_test.exs rank-with-nan grid)
-    key = c.desc_nulls_last() if descending else c.asc_nulls_last()
-    val_specs: dict[str, str] = {}
-    for out_col, method in methods.items():
-        if method == "random":
-            s = out.withColumn("__rnd__", F.rand(seed))
-            s = with_global_index(s, [key, F.col("__rnd__").asc()], name="__rk__")
-            out = s.withColumn(
-                out_col, F.when(c.isNotNull(), (F.col("__rk__") + 1).cast("long"))
-            ).drop("__rk__", "__rnd__")
-        elif method == "ordinal":
-            tie = [F.col(order_col).asc()] if order_col is not None else []
-            s = with_global_index(out, [key] + tie, name="__rk__")
-            out = s.withColumn(
-                out_col, F.when(c.isNotNull(), (F.col("__rk__") + 1).cast("long"))
-            ).drop("__rk__")
-        elif method in ("min", "max", "average", "dense"):
-            val_specs[out_col] = method
-        else:
-            raise NotImplementedError(f"rank method {method!r}")
-    if not val_specs:
-        return out
-
-    # nulls excluded from the value table: the left join below then
-    # reports nil rank for null rows, and non-null prefixes are unshifted
-    vals = (
-        sdf.select(value_col)
-        .filter(c.isNotNull())
-        .groupBy(value_col)
+def _value_counts(sdf: SDF, cols: list[str]) -> SDF:
+    """The ``(__cid__, __v__, __c__)`` melt: one row per column id and
+    distinct non-null value, with its row count — one map-combined
+    groupBy, memory bounded by distinct values per task, never rows.
+    Nulls are left out, so non-null prefixes are unshifted and a left
+    join back reports nil for null rows (reference rank/2 keeps nils as
+    nil without consuming ranks). ``cols`` share one Spark type (the
+    melt array is uniform)."""
+    melted = sdf.select(F.posexplode(F.array(*[F.col(c) for c in cols])).alias("__cid__", "__v__"))
+    return (
+        melted.filter(F.col("__v__").isNotNull())
+        .groupBy("__cid__", "__v__")
         .agg(F.count(F.lit(1)).alias("__c__"))
     )
-    # r12: route small/big on the DISTINCT count, not the frame row
-    # count. The old limit-probe couldn't see uniqueness, so a heavy-ties
-    # column (50 distinct values in a 600k-row frame) paid the full
-    # range-shuffle/checkpoint/stats kernel. One cheap map-combined
-    # APPROX probe (approx_count_distinct + byte sums — routing only,
-    # never results) replaces the limit-probe job; the 10% margin under
-    # the broadcast bound absorbs the estimator's error, and a
-    # mis-route in either direction stays correct (a slightly-too-big
-    # single window task, or a range kernel over a smallish table).
-    # The join-back broadcast is gated on ESTIMATED BYTES, not row count
-    # alone (a 2M-distinct wide-string column must not force a multi-GB
-    # broadcast).
-    nv = n_hint
-    small_ok = None
-    est_bytes = None
-    if nv is None or nv > SMALL_VALS_MAX:
-        vt = sdf.schema[value_col].dataType
+
+
+def _value_prefix(vals: SDF, key: Column, small: bool) -> SDF:
+    """Add ``__lc__`` (inclusive row-count prefix: rows whose value is at
+    or before this one in ``key`` order) and ``__dp__`` (0-based dense
+    position) within each column id of a :func:`_value_counts` table.
+
+    ``small`` (a summary-sized table): one window partitioned by
+    ``__cid__`` — a deliberate one-task-per-column window, bounded like
+    every driver summary here, with no range sampling pass, checkpoint
+    or stats job. ``__cid__`` comes out of the posexplode, so it is not
+    foldable and WindowExec stays keyed even for one column. Otherwise
+    the distributed kernel: range-partition on ``(cid, key)``, pin the
+    nondeterministic ids, one stats job, per-(partition, column) offsets
+    accumulated on the driver and re-emitted as a constant-array
+    projection (a broadcast lookup past ARRAY_LOOKUP_MAX slots)."""
+    if small:
+        w = W.partitionBy("__cid__").orderBy(key)
+        return vals.withColumn(
+            "__lc__", F.sum("__c__").over(w.rowsBetween(W.unboundedPreceding, 0))
+        ).withColumn("__dp__", F.row_number().over(w) - 1)
+    cid = F.col("__cid__").asc()
+    v = vals.repartitionByRange(cid, key).sortWithinPartitions(cid, key)
+    v = v.withColumn("__mono__", F.monotonically_increasing_id())
+    v = v.withColumn("__vpid__", F.spark_partition_id())
+    v = v.localCheckpoint(eager=False)  # pin nondeterministic ids before the stats job
+    stats = v.groupBy("__vpid__", "__cid__").agg(
+        F.count(F.lit(1)).alias("__n__"),
+        F.min("__mono__").alias("__mn__"),
+        F.sum("__c__").alias("__t__"),
+    ).collect()
+    nc = 1 + max((r["__cid__"] for r in stats), default=0)
+    # accumulate each column's prefixes over its partitions in range order
+    stats.sort(key=lambda r: (r["__cid__"], r["__vpid__"]))
+    offs: dict = {}  # slot -> (dense offset, min mono id, row-count offset)
+    run: dict = {}
+    nparts = 0
+    for r in stats:
+        c, p = r["__cid__"], r["__vpid__"]
+        d0, c0 = run.get(c, (0, 0))
+        offs[p * nc + c] = (d0, r["__mn__"], c0)
+        run[c] = (d0 + r["__n__"], c0 + r["__t__"])
+        nparts = max(nparts, p + 1)
+    nslots = nparts * nc
+    slot = F.col("__vpid__") * nc + F.col("__cid__")
+    w = W.partitionBy("__vpid__", "__cid__").orderBy("__mono__").rowsBetween(W.unboundedPreceding, 0)
+    v = v.withColumn("__lc__", F.sum("__c__").over(w))
+    names = ("__doff__", "__vmn__", "__coff__")
+    if nslots <= ARRAY_LOOKUP_MAX:
+        v = v.withColumns(
+            {
+                name: _array_lookup(slot, _dense({s: o[j] for s, o in offs.items()}, nslots, 0), T.LongType())
+                for j, name in enumerate(names)
+            }
+        )
+    else:
+        lookup = _lookup_df(
+            vals.sparkSession,
+            [(s, *o) for s, o in offs.items()],
+            [T.StructField("__slot__", T.LongType())] + [T.StructField(n, T.LongType()) for n in names],
+        )
+        v = v.withColumn("__slot__", slot).join(F.broadcast(lookup), "__slot__", "left")
+    v = v.withColumns(
+        {
+            "__lc__": F.col("__coff__") + F.col("__lc__"),
+            "__dp__": F.col("__doff__") + (F.col("__mono__") - F.col("__vmn__")),
+        }
+    )
+    return v.drop("__mono__", "__vpid__", "__slot__", *names)
+
+
+def _rank_expr(method: str) -> Column:
+    """A value-statistic rank from the :func:`_value_prefix` columns."""
+    lc, c = F.col("__lc__"), F.col("__c__")
+    if method == "min":
+        return (lc - c + 1).cast("long")
+    if method == "max":
+        return lc.cast("long")
+    if method == "average":
+        return (2 * lc - c + 1).cast("double") / 2.0
+    if method == "dense":
+        return (F.col("__dp__") + 1).cast("long")
+    raise NotImplementedError(f"rank method {method!r}")
+
+
+def value_ranks(
+    sdf: SDF,
+    specs: dict[str, dict[str, str]],
+    descending: bool = False,
+    n_hint: int | None = None,
+) -> SDF:
+    """Global value-statistic ranks (reference series.ex rank/2 methods
+    min/max/average/dense) of one or more columns in ONE kernel pass.
+
+    ``specs``: source column -> {out column: method}; an out column may
+    replace its source (the spearman path ranks in place). All sources
+    share ONE Spark type (callers cast first if they accept the loss).
+    The frame never range-shuffles: the sources melt into one
+    distinct-value table (:func:`_value_counts`), one prefix pass over it
+    (:func:`_value_prefix`) yields count, count-prefix and dense
+    position, every requested method derives from those three, and each
+    source equi-joins its slice back on the value — ties need no
+    colocation. Null values rank as nil.
+
+    Routing: a caller-known exact row count ``n_hint`` at or under
+    SMALL_VALS_MAX bounds every column's table, so all columns take the
+    small path with a broadcast join-back. Otherwise ONE map-combined
+    approx probe (routing only, never results) measures each column's
+    distinct count and bytes; :func:`_rank_small_ok` routes each column
+    small or big, and the join-back broadcasts only a column whose
+    estimated bytes fit BC_BYTES_MAX (row count alone must not force a
+    wide-string broadcast)."""
+    cols = list(specs)
+    nc = len(cols)
+    dts = {sdf.schema[c].dataType.simpleString() for c in cols}
+    assert len(dts) == 1, f"value_ranks requires one shared dtype, got {dts}"
+    rank_cols = {m: _rank_expr(m) for outs in specs.values() for m in outs.values()}
+    key = F.col("__v__").desc() if descending else F.col("__v__").asc()
+    vals = _value_counts(sdf, cols)
+    if n_hint is not None and n_hint <= SMALL_VALS_MAX:
+        small = bc = set(range(nc))
+    else:
         var_width = not isinstance(
-            vt,
+            sdf.schema[cols[0]].dataType,
             (T.NumericType, T.DateType, T.TimestampType, T.TimestampNTZType, T.BooleanType),
         )
-        aggs = [F.approx_count_distinct(value_col).alias("__nd__")]
+        aggs = [F.approx_count_distinct(c).alias(f"__nd{i}__") for i, c in enumerate(cols)]
         if var_width:
-            # per-ROW byte sum: an upper bound on the distinct-value
-            # bytes, so it can only under-broadcast (safe direction)
-            aggs.append(
-                F.sum(F.octet_length(F.col(value_col).cast("binary"))).alias("__b__")
+            # per-ROW byte sums: upper bounds on the distinct-value bytes,
+            # so they can only under-broadcast (the safe direction)
+            aggs += [
+                F.sum(F.octet_length(F.col(c).cast("binary"))).alias(f"__b{i}__")
+                for i, c in enumerate(cols)
+            ]
+        stat = sdf.select(*cols).agg(*aggs).collect()[0]
+        nd = [stat[f"__nd{i}__"] or 0 for i in range(nc)]
+        ebytes = [
+            ((stat[f"__b{i}__"] or 0) if var_width else 8 * nd[i]) + 16 * nd[i] for i in range(nc)
+        ]
+        small = {i for i in range(nc) if _rank_small_ok(nd[i], ebytes[i], approx=True)}
+        bc = {i for i in range(nc) if ebytes[i] <= BC_BYTES_MAX}
+    big = set(range(nc)) - small
+    # pin the melt when it has more than one consumer: each small
+    # column's join-back is its own plan branch, and the big kernel's
+    # range exchange samples its child before shuffling it
+    if len(small) + 2 * bool(big) > 1:
+        vals = vals.localCheckpoint(eager=False)
+    tables = {}
+    for is_small, ids in ((True, small), (False, big)):
+        if ids:
+            part = vals if len(ids) == nc else vals.filter(F.col("__cid__").isin(sorted(ids)))
+            rv = _value_prefix(part, key, is_small).select(
+                "__cid__",
+                F.col("__v__").alias("__vv__"),
+                *[e.alias(f"__rk_{m}__") for m, e in rank_cols.items()],
             )
-        stat = sdf.select(value_col).agg(*aggs).collect()[0]
-        nd_est = stat["__nd__"] or 0
-        est_bytes = ((stat["__b__"] or 0) if var_width else 8 * nd_est) + 16 * nd_est
-        small_ok = _rank_small_ok(nd_est, est_bytes, approx=True)
-        if not small_ok:
-            # big path: pin the value table — the range exchange SAMPLES
-            # its child and then shuffles it, which would execute the
-            # scan+aggregate twice unpinned
-            vals = vals.localCheckpoint(eager=False)
-    if (nv is not None and nv <= SMALL_VALS_MAX) or small_ok:
-        # summary-sized value table: a deliberate one-partition window
-        # (bounded by nv, like every driver summary here) — no range
-        # sampling pass, no checkpoint, no stats job. The partition key
-        # is a NON-FOLDABLE constant zero (hash&0; a plain literal or
-        # __c__*0 is optimized away, leaving an unpartitioned WindowExec
-        # and its single-partition warning).
-        vals = vals.withColumn("__sum0__", F.xxhash64(F.col("__c__")).bitwiseAND(F.lit(0)))
-        w_ord = W.partitionBy("__sum0__").orderBy(key)
-        v2 = vals.withColumn(
-            "__lc__", F.sum("__c__").over(w_ord.rowsBetween(W.unboundedPreceding, 0))
-        ).withColumn("__dp__", F.row_number().over(w_ord) - 1)
-        cum = F.col("__lc__")  # inclusive row-count prefix
-        dense_pos = F.col("__dp__")
-    else:
-        v = vals.repartitionByRange(key).sortWithinPartitions(key)
-        v = v.withColumn("__mono__", F.monotonically_increasing_id())
-        v = v.withColumn("__vpid__", F.spark_partition_id())
-        v = v.localCheckpoint(eager=False)  # nondeterministic ids: pin before the stats job
-        stats = v.groupBy("__vpid__").agg(
-            F.count(F.lit(1)).alias("__n__"),
-            F.min("__mono__").alias("__mn__"),
-            F.sum("__c__").alias("__t__"),
-        ).collect()
-        stats.sort(key=lambda r: r["__vpid__"])
-        doffs, vmns, coffs = {}, {}, {}
-        doff, coff = 0, 0
-        for r in stats:
-            doffs[r["__vpid__"]] = doff
-            vmns[r["__vpid__"]] = r["__mn__"]
-            coffs[r["__vpid__"]] = coff
-            doff += r["__n__"]
-            coff += r["__t__"]
-        nparts = (max(doffs) + 1) if doffs else 0
-        vpid = F.col("__vpid__")
-        w = W.partitionBy("__vpid__").orderBy("__mono__").rowsBetween(W.unboundedPreceding, 0)
-        v2 = v.withColumn("__lc__", F.sum("__c__").over(w))
-        if nparts <= ARRAY_LOOKUP_MAX:
-            v2 = v2.withColumns(
-                {
-                    "__doff__": _array_lookup(vpid, _dense(doffs, nparts, 0), T.LongType()),
-                    "__vmn__": _array_lookup(vpid, _dense(vmns, nparts, 0), T.LongType()),
-                    "__coff__": _array_lookup(vpid, _dense(coffs, nparts, 0), T.LongType()),
-                }
-            )
-        else:
-            lookup = _lookup_df(
-                sdf.sparkSession,
-                [(p, doffs[p], vmns[p], coffs[p]) for p in doffs],
-                [
-                    T.StructField("__vpid__", T.IntegerType()),
-                    T.StructField("__doff__", T.LongType()),
-                    T.StructField("__vmn__", T.LongType()),
-                    T.StructField("__coff__", T.LongType()),
-                ],
-            )
-            v2 = v2.join(F.broadcast(lookup), "__vpid__", "left")
-        cum = F.col("__coff__") + F.col("__lc__")  # inclusive row-count prefix
-        dense_pos = F.col("__doff__") + (F.col("__mono__") - F.col("__vmn__"))
-    sel = [F.col(value_col).alias("__v2__")]
-    tmp_names = {}
-    for i, (out_col, method) in enumerate(val_specs.items()):
-        if method == "min":
-            e = (cum - F.col("__c__") + 1).cast("long")
-        elif method == "max":
-            e = cum.cast("long")
-        elif method == "average":
-            e = (2 * cum - F.col("__c__") + 1).cast("double") / 2.0
-        else:  # dense
-            e = (dense_pos + 1).cast("long")
-        tmp_names[out_col] = f"__rv{i}__"
-        sel.append(e.alias(tmp_names[out_col]))
-    rv = v2.select(*sel)
-    if (nv is not None and nv <= SMALL_VALS_MAX) or (
-        est_bytes is not None and est_bytes <= BC_BYTES_MAX
-    ):
-        # known-small: either the caller-known frame row count (an upper
-        # bound on the rank table, <= 2^17 rows) or the measured value
-        # table BYTES under the broadcast budget — broadcast the rank
-        # table instead of shuffling the frame by value. Byte-gated (r12,
-        # ADVICE): a row-count-only gate would force a multi-GB broadcast
-        # for ~2M distinct wide strings.
-        rv = F.broadcast(rv)
-    # temp output names + withColumn so out_col may REPLACE value_col
-    # itself (the spearman path ranks a column in place)
-    joined = out.join(rv, c.eqNullSafe(F.col("__v2__")), "left")
-    joined = joined.withColumns({o: F.col(t) for o, t in tmp_names.items()})
-    return joined.drop("__v2__", *tmp_names.values())
+            tables.update(dict.fromkeys(ids, rv))
+    out, tmp = sdf, {}
+    for i, c in enumerate(cols):
+        rvi = tables[i].filter(F.col("__cid__") == i).select(
+            "__vv__",
+            *[F.col(f"__rk_{m}__").alias(f"__rk{i}_{m}__") for m in dict.fromkeys(specs[c].values())],
+        )
+        if i in bc:
+            rvi = F.broadcast(rvi)
+        out = out.join(rvi, F.col(c).eqNullSafe(F.col("__vv__")), "left").drop("__vv__")
+        tmp.update({o: f"__rk{i}_{m}__" for o, m in specs[c].items()})
+    # temp names + withColumns so an out column may replace its source
+    out = out.withColumns({o: F.col(t) for o, t in tmp.items()})
+    return out.drop(*set(tmp.values()))
 
 
 def global_rank(
@@ -636,236 +646,27 @@ def global_rank(
     method: str = "ordinal",
     descending: bool = False,
     seed: int | None = None,
-    n_hint: int | None = None,
 ) -> SDF:
-    """Single-column convenience wrapper over :func:`rank_columns`."""
-    return rank_columns(sdf, order_col, value_col, {out_col: method}, descending, seed, n_hint=n_hint)
-
-
-def rank_columns_multi(
-    sdf: SDF,
-    value_cols: dict[str, str],
-    method: str = "average",
-    descending: bool = False,
-    n_hint: int | None = None,
-) -> SDF:
-    """Global value-statistic ranks for SEVERAL (double-castable) columns
-    in ONE kernel pass: the (col_id, value) melt range-shuffles once, one
-    checkpoint, one stats job with per-column prefix resets on the driver,
-    one pid-window — instead of a full kernel per column. Each column then
-    equi-joins its rank back (that part is inherently per-column).
-
-    ``value_cols``: src_col -> out_col (out may replace src — the spearman
-    path ranks in place). All sources must share ONE Spark type (the melt
-    array is uniform; callers cast first if they accept the loss). Null
-    values rank as NIL without consuming ranks (reference rank/2 — the
-    left join back reports nil), matching :func:`rank_columns`.
-    Used by frame._pairwise spearman and fused rank mutates: N rank
-    kernels collapse to 1.
-    """
-    assert method in ("min", "max", "average", "dense")
-    cols = list(value_cols)
-    nc = len(cols)
-    dts = {sdf.schema[c].dataType.simpleString() for c in cols}
-    assert len(dts) == 1, f"rank_columns_multi requires one shared dtype, got {dts}"
-    key = F.col("__v__").desc() if descending else F.col("__v__").asc()
-    melted = sdf.select(F.posexplode(F.array(*[F.col(c) for c in cols])).alias("__cid__", "__v__"))
-    vals = (
-        melted.filter(F.col("__v__").isNotNull())
-        .groupBy("__cid__", "__v__")
-        .agg(F.count(F.lit(1)).alias("__c__"))
-    )
-    # caller-known exact count (see rank_columns): a summary-sized FRAME
-    # bounds every column's value table
-    nv = n_hint
-    if nv is not None and nv <= SMALL_VALS_MAX:
-        # summary-sized value table: one window hash-partitioned by column
-        # id replaces range shuffle + checkpoint + stats job (see
-        # SMALL_VALS_MAX); join-backs below broadcast the rank table
-        w_ord = W.partitionBy("__cid__").orderBy(key)
-        v2 = vals.withColumn(
-            "__lc__", F.sum("__c__").over(w_ord.rowsBetween(W.unboundedPreceding, 0))
-        ).withColumn("__dp__", F.row_number().over(w_ord) - 1)
-        cum = F.col("__lc__")
-        dense_pos = F.col("__dp__")
-        return _rank_multi_emit(sdf, v2, cum, dense_pos, cols, value_cols, method, True)
-    # r12: route EACH column on its approximate distinct count (the old
-    # limit-probe saw only the frame row count, so a 50-distinct
-    # heavy-ties column fused with a near-unique one paid the full range
-    # kernel too). ONE cheap map-combined approx probe over the frame
-    # (routing only, never results — see _rank_small_ok's margin)
-    # replaces the probe job; summary-sized columns take the windowless
-    # small path, big columns the range kernel — and the join-back
-    # broadcast is byte-gated per column (ADVICE: row count alone must
-    # not force wide-string broadcasts).
-    dt0 = sdf.schema[cols[0]].dataType
-    var_width = not isinstance(
-        dt0,
-        (T.NumericType, T.DateType, T.TimestampType, T.TimestampNTZType, T.BooleanType),
-    )
-    paggs = [F.approx_count_distinct(c).alias(f"__nd{i}__") for i, c in enumerate(cols)]
-    if var_width:
-        # per-ROW byte sums: upper bounds on distinct-value bytes — can
-        # only under-broadcast (the safe direction)
-        paggs += [
-            F.sum(F.octet_length(F.col(c).cast("binary"))).alias(f"__b{i}__")
-            for i, c in enumerate(cols)
-        ]
-    stat = sdf.select(*cols).agg(*paggs).collect()[0]
-    nd = {i: (stat[f"__nd{i}__"] or 0) for i in range(nc)}
-    ebytes = {
-        i: ((stat[f"__b{i}__"] or 0) if var_width else 8 * nd[i]) + 16 * nd[i]
-        for i in range(nc)
-    }
-    small_cids = [
-        i for i in range(nc) if _rank_small_ok(nd[i], ebytes[i], approx=True)
-    ]
-    big_cids = [i for i in range(nc) if i not in small_cids]
-    bc = {i: ebytes.get(i, 0) <= BC_BYTES_MAX for i in range(nc)}
-    # pin the melted table when it has >1 consumer (each small cid's
-    # join-back is its own plan branch; the big kernel's range exchange
-    # additionally samples its child before shuffling it)
-    if len(small_cids) + (2 if big_cids else 0) > 1:
-        vals = vals.localCheckpoint(eager=False)
-    sources: dict[int, SDF] = {}
-    if small_cids:
-        sv = vals.filter(F.col("__cid__").isin([int(i) for i in small_cids]))
-        w_ord = W.partitionBy("__cid__").orderBy(key)
-        v2s = sv.withColumn(
-            "__lc__", F.sum("__c__").over(w_ord.rowsBetween(W.unboundedPreceding, 0))
-        ).withColumn("__dp__", F.row_number().over(w_ord) - 1)
-        rvs = v2s.select(
-            "__cid__",
-            F.col("__v__").alias("__vv__"),
-            _rank_from_prefix(method, F.col("__lc__"), F.col("__c__"), F.col("__dp__")).alias("__rk__"),
-        )
-        for i in small_cids:
-            sources[i] = rvs
-    if big_cids:
-        rvb = _rank_multi_big(
-            vals.filter(F.col("__cid__").isin([int(i) for i in big_cids])),
-            sdf.sparkSession,
-            key,
-            nc,
-            method,
-        )
-        for i in big_cids:
-            sources[i] = rvb
-    out = sdf
-    for i, c in enumerate(cols):
-        rvi = sources[i].filter(F.col("__cid__") == i).select(
-            "__vv__", F.col("__rk__").alias(f"__rko{i}__")
-        )
-        if bc.get(i, True):
-            rvi = F.broadcast(rvi)
-        out = out.join(rvi, F.col(c).eqNullSafe(F.col("__vv__")), "left").drop("__vv__")
-    out = out.withColumns({value_cols[c]: F.col(f"__rko{i}__") for i, c in enumerate(cols)})
-    return out.drop(*[f"__rko{i}__" for i in range(len(cols))])
-
-
-def _rank_from_prefix(method: str, cum, c_col, dense_pos):
-    """Rank expression from (inclusive row-count prefix, tie count,
-    dense position) — shared by every value-statistic rank face."""
-    if method == "min":
-        return (cum - c_col + 1).cast("long")
-    if method == "max":
-        return cum.cast("long")
-    if method == "average":
-        return (2 * cum - c_col + 1).cast("double") / 2.0
-    return (dense_pos + 1).cast("long")  # dense
-
-
-def _rank_multi_big(bv: SDF, spark, key, nc: int, method: str) -> SDF:
-    """The range-shuffle + checkpoint + stats-job kernel of
-    rank_columns_multi, over the (pinned, pre-filtered) big-column slice
-    of the melted value table. Returns (__cid__, __vv__, __rk__)."""
-    v = bv.repartitionByRange(F.col("__cid__").asc(), key).sortWithinPartitions(
-        F.col("__cid__").asc(), key
-    )
-    v = v.withColumn("__mono__", F.monotonically_increasing_id())
-    v = v.withColumn("__vpid__", F.spark_partition_id())
-    v = v.localCheckpoint(eager=False)  # pin nondeterministic ids
-    stats = v.groupBy("__vpid__", "__cid__").agg(
-        F.count(F.lit(1)).alias("__n__"),
-        F.min("__mono__").alias("__mn__"),
-        F.sum("__c__").alias("__t__"),
-    ).collect()
-    # accumulate prefixes per column over partitions in range order
-    stats.sort(key=lambda r: (r["__cid__"], r["__vpid__"]))
-    doffs, vmns, coffs = {}, {}, {}
-    run_d: dict = {}
-    run_c: dict = {}
-    nparts = 0
-    for r in stats:
-        cid, pid = r["__cid__"], r["__vpid__"]
-        slot = pid * nc + cid
-        doffs[slot] = run_d.get(cid, 0)
-        coffs[slot] = run_c.get(cid, 0)
-        vmns[slot] = r["__mn__"]
-        run_d[cid] = doffs[slot] + r["__n__"]
-        run_c[cid] = coffs[slot] + r["__t__"]
-        nparts = max(nparts, pid + 1)
-    nslots = nparts * nc
-    slot = F.col("__vpid__") * nc + F.col("__cid__")
-    w = W.partitionBy("__vpid__", "__cid__").orderBy("__mono__").rowsBetween(W.unboundedPreceding, 0)
-    v2 = v.withColumn("__lc__", F.sum("__c__").over(w))
-    if nslots <= ARRAY_LOOKUP_MAX:
-        v2 = v2.withColumns(
-            {
-                "__doff__": _array_lookup(slot, _dense(doffs, nslots, 0), T.LongType()),
-                "__vmn__": _array_lookup(slot, _dense(vmns, nslots, 0), T.LongType()),
-                "__coff__": _array_lookup(slot, _dense(coffs, nslots, 0), T.LongType()),
-            }
-        )
+    """One global rank column (reference series.ex rank/2). ordinal and
+    random need per-row positions and go through the full-frame global
+    index (ties broken by ``order_col`` or a seeded draw); the value
+    statistics go through :func:`value_ranks`."""
+    c = F.col(value_col)
+    # nulls order LAST so non-null rows take ranks 1..n_valid, then the
+    # mask nils them out (series_test.exs rank-with-nan grid)
+    key = c.desc_nulls_last() if descending else c.asc_nulls_last()
+    if method == "random":
+        s = sdf.withColumn("__rnd__", F.rand(seed))
+        tie = [F.col("__rnd__").asc()]
+    elif method == "ordinal":
+        s = sdf
+        tie = [F.col(order_col).asc()] if order_col is not None else []
     else:
-        lookup = _lookup_df(
-            spark,
-            [(s, doffs[s], vmns[s], coffs[s]) for s in doffs],
-            [
-                T.StructField("__slot__", T.LongType()),
-                T.StructField("__doff__", T.LongType()),
-                T.StructField("__vmn__", T.LongType()),
-                T.StructField("__coff__", T.LongType()),
-            ],
-        )
-        v2 = v2.withColumn("__slot__", slot).join(F.broadcast(lookup), "__slot__", "left").drop("__slot__")
-    cum = F.col("__coff__") + F.col("__lc__")
-    dense_pos = F.col("__doff__") + (F.col("__mono__") - F.col("__vmn__"))
-    return v2.select(
-        "__cid__",
-        F.col("__v__").alias("__vv__"),
-        _rank_from_prefix(method, cum, F.col("__c__"), dense_pos).alias("__rk__"),
-    )
-
-
-def _rank_multi_emit(sdf, v2, cum, dense_pos, cols, value_cols, method, broadcast_rv, bc_cids=None):
-    """Shared tail of rank_columns_multi: derive the rank from the prefix
-    columns and equi-join each column's slice back onto the frame.
-    ``bc_cids``: column ids whose rank slice is known summary-sized
-    (exact distinct count from the stats job) — broadcast those even
-    when the kernel ran the big path."""
-    if method == "min":
-        rk = (cum - F.col("__c__") + 1).cast("long")
-    elif method == "max":
-        rk = cum.cast("long")
-    elif method == "average":
-        rk = (2 * cum - F.col("__c__") + 1).cast("double") / 2.0
-    else:  # dense
-        rk = (dense_pos + 1).cast("long")
-    rv = v2.select("__cid__", F.col("__v__").alias("__vv__"), rk.alias("__rk__"))
-    if broadcast_rv and len(cols) > 1:
-        # small path has no upstream checkpoint: pin the (bounded) rank
-        # table once so the per-column slices don't each recompute the
-        # melt + agg + window chain
-        rv = rv.localCheckpoint(eager=False)
-    out = sdf
-    for i, c in enumerate(cols):
-        rvi = rv.filter(F.col("__cid__") == i).select("__vv__", F.col("__rk__").alias(f"__rko{i}__"))
-        if broadcast_rv or (bc_cids is not None and i in bc_cids):
-            rvi = F.broadcast(rvi)
-        out = out.join(rvi, F.col(c).eqNullSafe(F.col("__vv__")), "left").drop("__vv__")
-    out = out.withColumns({value_cols[c]: F.col(f"__rko{i}__") for i, c in enumerate(cols)})
-    return out.drop(*[f"__rko{i}__" for i in range(len(cols))])
+        return value_ranks(sdf, {value_col: {out_col: method}}, descending)
+    s = with_global_index(s, [key] + tie, name="__rk__")
+    return s.withColumn(
+        out_col, F.when(c.isNotNull(), (F.col("__rk__") + 1).cast("long"))
+    ).drop("__rk__", "__rnd__")
 
 
 # ---------------------------------------------------------------------------
@@ -1532,72 +1333,24 @@ def ewm_gapped(
 
 def _cum_value_counts(sdf: SDF, value_col: str):
     """Distinct-value inclusive row-count prefix over a whole column,
-    WITHOUT a whole-column collect:
-
-    1. one map-combined distinct-value count aggregation (memory bounded
-       by distinct values per task, never rows),
-    2. an inclusive row-count prefix over the distinct table — a bounded
-       single-partition window when the table is summary-sized, else the
-       range-partition + driver per-partition-offset pattern of
-       ``rank_columns``.
+    WITHOUT a whole-column collect: the rank kernel's
+    :func:`_value_counts` table, pinned (it feeds the exact stats probe
+    AND the prefix pass), then :func:`_value_prefix` — the small window
+    when the table is summary-sized, else the distributed kernel.
 
     Returns ``(v2, n)``: a frame with ``__v__`` (distinct non-null
-    value), ``__c__`` (its row count) and ``__cum__`` (rows with value
+    value), ``__c__`` (its row count) and ``__lc__`` (rows with value
     <= it), plus the total non-null row count (``(None, 0)`` when
     empty). NaN groups to one distinct value and sorts greatest (Spark
     ordering), exactly like a sorted-array rendering."""
-    c = F.col(value_col)
-    vals = (
-        sdf.select(c.alias("__v__"))
-        .filter(c.isNotNull())
-        .groupBy("__v__")
-        .agg(F.count(F.lit(1)).alias("__c__"))
-    )
-    key = F.col("__v__").asc()
-    # distinct table reused by the stats probe AND the prefix pass:
-    # pin it so the upstream plan runs once
-    vals = vals.localCheckpoint(eager=False)
+    vals = _value_counts(sdf, [value_col]).localCheckpoint(eager=False)
     stat = vals.agg(
         F.count(F.lit(1)).alias("__nv__"), F.sum("__c__").alias("__n__")
     ).collect()[0]
     nv, n = stat["__nv__"], stat["__n__"]
     if not n:
         return None, 0
-    if nv <= SMALL_VALS_MAX:
-        # summary-sized distinct table: one bounded single-partition
-        # window (same deliberate choice as rank_columns — the partition
-        # key is a non-foldable constant zero so WindowExec stays keyed)
-        v = vals.withColumn("__sum0__", F.xxhash64(F.col("__c__")).bitwiseAND(F.lit(0)))
-        w = W.partitionBy("__sum0__").orderBy(key).rowsBetween(W.unboundedPreceding, 0)
-        v2 = v.withColumn("__cum__", F.sum("__c__").over(w))
-    else:
-        v = vals.repartitionByRange(key).sortWithinPartitions(key)
-        v = v.withColumn("__vpid__", F.spark_partition_id())
-        v = v.localCheckpoint(eager=False)  # nondeterministic pid: pin
-        stats = v.groupBy("__vpid__").agg(F.sum("__c__").alias("__t__")).collect()
-        stats.sort(key=lambda r: r["__vpid__"])
-        coffs, coff = {}, 0
-        for r in stats:
-            coffs[r["__vpid__"]] = coff
-            coff += r["__t__"]
-        nparts = (max(coffs) + 1) if coffs else 0
-        w = W.partitionBy("__vpid__").orderBy(key).rowsBetween(W.unboundedPreceding, 0)
-        loc = F.sum("__c__").over(w)
-        if nparts <= ARRAY_LOOKUP_MAX:
-            off = _array_lookup(F.col("__vpid__"), _dense(coffs, nparts, 0), T.LongType())
-        else:
-            lookup = _lookup_df(
-                sdf.sparkSession,
-                [(p, coffs[p]) for p in coffs],
-                [
-                    T.StructField("__vpid__", T.IntegerType()),
-                    T.StructField("__coff__", T.LongType()),
-                ],
-            )
-            v = v.join(F.broadcast(lookup), "__vpid__", "left")
-            off = F.col("__coff__")
-        v2 = v.withColumn("__cum__", (off + loc).cast("long"))
-    return v2, n
+    return _value_prefix(vals, F.col("__v__").asc(), nv <= SMALL_VALS_MAX), n
 
 
 def nearest_quantiles(sdf: SDF, value_col: str, qs: list) -> list:
@@ -1611,8 +1364,10 @@ def nearest_quantiles(sdf: SDF, value_col: str, qs: list) -> list:
     scans (value grids generated in IEEE-bit space for floats, so the
     bracket provably shrinks 16x per round) and one bounded bracket
     collect. Everything else (decimal, string, ...) falls back to the
-    distinct-value rank prefix (``_cum_value_counts`` — one groupBy
-    shuffle bounded by distinct values) + one min-filter aggregation.
+    rank kernel's distinct-value prefix (``_cum_value_counts`` — one
+    groupBy shuffle bounded by distinct values, then ``_value_prefix``,
+    range-partitioned past SMALL_VALS_MAX distinct values) + one
+    min-filter aggregation.
     Returns python scalars, None per q for an empty/all-null column."""
     import math as _math
 
@@ -1638,7 +1393,7 @@ def nearest_quantiles(sdf: SDF, value_col: str, qs: list) -> list:
     targets = [min(max(int(_math.floor(q * (n - 1) + 0.5)) + 1, 1), n) for q in qs]
     row = v2.agg(
         *[
-            F.min(F.when(F.col("__cum__") >= F.lit(t), F.col("__v__"))).alias(f"__q{i}__")
+            F.min(F.when(F.col("__lc__") >= F.lit(t), F.col("__v__"))).alias(f"__q{i}__")
             for i, t in enumerate(targets)
         ]
     ).collect()[0]

@@ -476,8 +476,8 @@ def q_ewm_global(spark, sf_dir):
 )
 def q_rank_ties(spark, sf_dir):
     """rank tie methods average/max/dense on a heavily tied column,
-    through the distributed global-rank kernel (reference series.ex rank;
-    operators/ordered.py global_rank)."""
+    through the distributed value-rank kernel (reference series.ex rank;
+    operators/ordered.py value_ranks)."""
     cust = _t(spark, sf_dir, "customer")
     return cust.mutate(
         r_avg=f.rank(col("c_nationkey"), method="average"),

@@ -52,6 +52,23 @@ def duck():
     return con
 
 
+@pytest.fixture
+def value_prefix_routes(monkeypatch):
+    """The ``small`` flag of every ``ordered._value_prefix`` call made
+    while the test runs: False means the range-partition kernel ran."""
+    from explorer_spark.operators import ordered as ordk
+
+    routes = []
+    inner = ordk._value_prefix
+
+    def recording(vals, key, small):
+        routes.append(small)
+        return inner(vals, key, small)
+
+    monkeypatch.setattr(ordk, "_value_prefix", recording)
+    return routes
+
+
 def pytest_runtest_logreport(report):
     _durations[report.nodeid] += report.duration
 

@@ -539,6 +539,14 @@ def test_series_cast_and_mutate_cast_agree(spark, source, target):
         return s.to_frame().mutate(out=f.cast(col(s.name), target))["out"]
 
     assert via_series == _cast_outcome(via_mutate)
+    kind = target[0] if isinstance(target, tuple) else target
+    if source == "time" and kind in ("date", "naive_datetime", "datetime", "duration"):
+        # ns since midnight is no epoch or duration count: both casts
+        # raise while the plan is built, not at collect
+        with pytest.raises(ValueError, match=":time"):
+            s.cast(target)
+        with pytest.raises(ValueError, match=":time"):
+            s.to_frame().mutate(out=f.cast(col(s.name), target))
 
 
 def test_list_cast_temporal_count_rules(spark):

@@ -140,15 +140,23 @@ def test_ungrouped_rank_descending(df, pdf):
     assert [float(v) for v in out["r"]] == [float(v) for v in want]
 
 
-@pytest.mark.parametrize("method,pd_method", [("min", "min"), ("max", "max"), ("dense", "dense"), ("average", "average")])
-def test_ungrouped_rank_methods_big_kernel(df, pdf, method, pd_method, monkeypatch):
-    """Value-statistic ranks through the DISTRIBUTED kernel (forced by
-    zeroing SMALL_VALS_MAX): small test frames would otherwise always
-    take the summary-window fast path."""
+def _force_big(monkeypatch):
+    # both tiers of _rank_small_ok: the row gate AND the broadcast-sized
+    # byte gate would otherwise keep test-sized tables on the window path
     monkeypatch.setattr(ordk, "SMALL_VALS_MAX", 0)
+    monkeypatch.setattr(ordk, "BC_BYTES_MAX", 0)
+
+
+@pytest.mark.parametrize("method,pd_method", [("min", "min"), ("max", "max"), ("dense", "dense"), ("average", "average")])
+def test_ungrouped_rank_methods_big_kernel(df, pdf, method, pd_method, monkeypatch, value_prefix_routes):
+    """Value-statistic ranks through the DISTRIBUTED kernel (forced by
+    zeroing both small-path gates): small test frames would otherwise
+    always take the summary-window fast path."""
+    _force_big(monkeypatch)
     out = df.mutate(r=Expr("rank", col("x"), method)).to_pandas()
     want = pdf["x"].rank(method=pd_method)
     assert [float(v) for v in out["r"]] == [float(v) for v in want]
+    assert value_prefix_routes == [False]
 
 
 def test_ungrouped_rolling_window(df, pdf):
@@ -189,15 +197,14 @@ def test_no_single_partition_window_in_plan(df):
     # column or belong to the tiny summary branch (reads a group-by output)
     import re
 
-    # __sum0__ / __cid__ mark the gated summary-table windows (over the
-    # bounded distinct-value table, see ordered.SMALL_VALS_MAX)
+    # __cid__ marks the gated summary-table windows (over the bounded
+    # distinct-value table, see ordered.SMALL_VALS_MAX)
     for m in re.finditer(r"Window \[(.*?)\], \[(.*?)\]", plan):
         spec = m.group(0)
         assert (
             "__bkt__" in spec
             or "__pid__" in spec
             or "__vpid__" in spec
-            or "__sum0__" in spec
             or "__cid__" in spec
             or "windowspecdefinition" not in spec
         )
@@ -291,13 +298,8 @@ def test_ewm_no_single_partition_window(spark, pdf):
     assert "__g__" not in plan
 
 
-def test_rank_columns_multi_matches_pandas(spark):
-    """Multi-column average ranks (one melted kernel) == pandas
-    rank(method='average'), ties and nulls included."""
+def _two_column_pdf():
     import numpy as np
-    import pandas as pd
-
-    from explorer_spark.operators.ordered import rank_columns_multi
 
     rng = np.random.default_rng(7)
     pdf = pd.DataFrame(
@@ -307,22 +309,31 @@ def test_rank_columns_multi_matches_pandas(spark):
         }
     )
     pdf.loc[rng.choice(300, 25, replace=False), "a"] = np.nan
-    sdf = spark.createDataFrame(pdf)
-    got = (
-        rank_columns_multi(sdf, {"a": "ra", "b": "rb"}, method="average")
-        .orderBy("a", "b")
-        .toPandas()
-    )
-    want = pdf.copy()
-    # nulls stay NIL without consuming ranks (reference rank/2; the
-    # kernel's value table excludes them) — pandas rank() excludes NaN
-    # the same way, so the differentials align with no offset
-    want["ra"] = pdf["a"].rank(method="average")
-    want["rb"] = pdf["b"].rank(method="average")
-    want = want.sort_values(["a", "b"], na_position="first").reset_index(drop=True)
-    m = want["a"].notna().to_numpy()
-    assert np.allclose(got["ra"].to_numpy()[m], want["ra"].to_numpy()[m])
-    assert np.allclose(got["rb"].to_numpy(), want["rb"].to_numpy())
+    return pdf
+
+
+def _assert_value_ranks(spark, specs, descending=False):
+    """value_ranks over _two_column_pdf == pandas rank per output column,
+    ties and nulls included: nulls stay NIL without consuming ranks
+    (reference rank/2; the kernel's value table excludes them), and
+    pandas rank() excludes NaN the same way, so ranks align with no
+    offset."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    pdf = _two_column_pdf()
+    sdf = spark.createDataFrame(pdf.reset_index()).withColumn("index", F.col("index").cast("long"))
+    got = ordk.value_ranks(sdf, specs, descending).orderBy("index").toPandas()
+    for src, outs in specs.items():
+        for out, method in outs.items():
+            want = pdf[src].rank(method=method, ascending=not descending).to_numpy()
+            assert np.allclose(got[out].to_numpy("float64"), want, equal_nan=True), (out, method)
+
+
+def test_value_ranks_multi_matches_pandas(spark, value_prefix_routes):
+    """Multi-column average ranks (one melted kernel) == pandas."""
+    _assert_value_ranks(spark, {"a": {"ra": "average"}, "b": {"rb": "average"}})
+    assert value_prefix_routes == [True]
 
 
 def test_small_index_fast_path(df, pdf, monkeypatch):
@@ -335,35 +346,87 @@ def test_small_index_fast_path(df, pdf, monkeypatch):
     assert sliced["x"].tolist() == pdf["x"].iloc[3:8].tolist()
 
 
-def test_rank_columns_multi_big_kernel(spark, monkeypatch):
+def test_value_ranks_multi_big_kernel(spark, monkeypatch, value_prefix_routes):
     """Melted multi-column ranks through the DISTRIBUTED kernel (forced
-    by zeroing SMALL_VALS_MAX) — same pandas differential as above."""
+    by zeroing both small-path gates) — same pandas differential, every
+    method, both directions, and an out column replacing its source."""
+    _force_big(monkeypatch)
+    specs = {"a": {"ra_min": "min", "ra_dense": "dense"}, "b": {"b": "average", "rb_max": "max"}}
+    for descending in (False, True):
+        _assert_value_ranks(spark, specs, descending)
+    assert value_prefix_routes == [False, False]
+
+
+def test_value_ranks_mixed_small_and_big_columns(spark, monkeypatch, value_prefix_routes):
+    """One value_ranks call whose columns route to different sides of
+    the gate: SMALL_VALS_MAX between the distinct counts of a (12) and
+    b (~50) sends a through the window and b through the range kernel."""
+    monkeypatch.setattr(ordk, "SMALL_VALS_MAX", 25)
+    monkeypatch.setattr(ordk, "BC_BYTES_MAX", 0)
+    _assert_value_ranks(spark, {"a": {"ra": "min", "ra_avg": "average"}, "b": {"rb": "dense"}})
+    assert value_prefix_routes == [True, False]
+
+
+def test_value_ranks_join_back_broadcast_gated_on_bytes(spark, monkeypatch):
+    """The join-back carries a broadcast hint only while the measured
+    bytes fit BC_BYTES_MAX; at 0 no hint is left for the planner."""
+    sdf = spark.createDataFrame(_two_column_pdf())
+    specs = {"a": {"ra": "average"}, "b": {"rb": "average"}}
+
+    def plan():
+        return ordk.value_ranks(sdf, specs)._jdf.queryExecution().optimizedPlan().toString()
+
+    assert plan().count("strategy=broadcast") == 2
+    monkeypatch.setattr(ordk, "BC_BYTES_MAX", 0)
+    assert "strategy=broadcast" not in plan()
+
+
+def test_fused_rank_mutate_submits_one_probe(spark):
+    """Every plain-column value rank of a mutate shares one kernel and
+    one routing probe: three ranks with two methods over two double
+    columns submit the same build-time jobs as one method over both
+    columns (one probe, one melt pin). A kernel per column submitted
+    a second probe. The values match pandas."""
     import numpy as np
 
-    from explorer_spark.operators.ordered import rank_columns_multi
+    pdf = _two_column_pdf()
+    d = from_pandas(pdf, spark=spark)
+    sc = spark.sparkContext
 
+    def build(group, **ranks):
+        sc.setJobGroup(group, group)
+        try:
+            out = d.mutate(**{name: Expr("rank", col(src), m) for name, (src, m) in ranks.items()})
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, one_method = build("rank_probe_one_method", a_avg=("a", "average"), b_avg=("b", "average"))
+    out, fused = build(
+        "rank_probe_fused", a_min=("a", "min"), a_dense=("a", "dense"), b_avg=("b", "average")
+    )
+    assert one_method > 0
+    assert fused == one_method
+    got = out.to_pandas()
+    for name, src, method in (("a_min", "a", "min"), ("a_dense", "a", "dense"), ("b_avg", "b", "average")):
+        want = pdf[src].rank(method=method).to_numpy()
+        assert np.allclose(got[name].to_numpy("float64"), want, equal_nan=True), name
+
+
+def test_nearest_quantiles_decimal_big_prefix(spark, monkeypatch, value_prefix_routes):
+    """Decimal whole-frame quantiles take the distinct-value prefix; with
+    SMALL_VALS_MAX zeroed its range kernel runs and still returns the
+    sorted-array nearest element."""
+    from decimal import Decimal
+
+    vals = [Decimal(v) for v in ("1.50", "2.25", "2.25", "3.00", "3.00", "3.00", "7.00", "-4.10")]
+    sdf = spark.createDataFrame([(v,) for v in vals + [None]], "d decimal(10,2)")
+    qs = [0.0, 0.25, 0.5, 0.9, 1.0]
     monkeypatch.setattr(ordk, "SMALL_VALS_MAX", 0)
-    rng = np.random.default_rng(7)
-    pdf = pd.DataFrame(
-        {
-            "a": rng.integers(0, 12, 300).astype("float64"),
-            "b": rng.normal(size=300).round(1),
-        }
-    )
-    pdf.loc[rng.choice(300, 25, replace=False), "a"] = np.nan
-    sdf = spark.createDataFrame(pdf)
-    got = (
-        rank_columns_multi(sdf, {"a": "ra", "b": "rb"}, method="average")
-        .orderBy("a", "b")
-        .toPandas()
-    )
-    want = pdf.copy()
-    want["ra"] = pdf["a"].rank(method="average")
-    want["rb"] = pdf["b"].rank(method="average")
-    want = want.sort_values(["a", "b"], na_position="first").reset_index(drop=True)
-    m = want["a"].notna().to_numpy()
-    assert np.allclose(got["ra"].to_numpy()[m], want["ra"].to_numpy()[m])
-    assert np.allclose(got["rb"].to_numpy(), want["rb"].to_numpy())
+    got = ordk.nearest_quantiles(sdf, "d", qs)
+    srt = sorted(vals)
+    assert got == [srt[int(math.floor(q * (len(srt) - 1) + 0.5))] for q in qs]
+    assert value_prefix_routes == [False]
 
 
 def test_ewm_gapped_mean_matches_pandas(spark, monkeypatch):
@@ -551,18 +614,18 @@ def test_scalefit_with_global_index(spark, monkeypatch):
     _assert_scales("with_global_index", small, big, plan)
 
 
-def test_scalefit_rank_columns(spark, monkeypatch):
-    """Value-statistic ranks: distinct-value kernel + equi-join back —
-    no frame-wide range shuffle, no single-partition stage."""
-    from explorer_spark.operators.ordered import rank_columns
-
+def test_scalefit_value_ranks(spark, monkeypatch, value_prefix_routes):
+    """Value-statistic ranks: distinct-value range kernel + equi-join
+    back — no frame-wide range shuffle, no single-partition stage."""
     _gates(monkeypatch)
+    monkeypatch.setattr(ordk, "BC_BYTES_MAX", 0)  # the second small-path tier
 
     def build(n):
-        return rank_columns(_scale_input(spark, n), None, "x", {"r_min": "min", "r_dense": "dense"})
+        return ordk.value_ranks(_scale_input(spark, n), {"x": {"r_min": "min", "r_dense": "dense"}})
 
     small, big, plan = _run_scaled(build)
-    _assert_scales("rank_columns", small, big, plan)
+    _assert_scales("value_ranks", small, big, plan)
+    assert value_prefix_routes and not any(value_prefix_routes)
 
 
 def test_scalefit_ewm_global(spark, monkeypatch):

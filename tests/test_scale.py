@@ -153,22 +153,27 @@ def test_embedding_lsh_candidate_stage_is_equi_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_rank_columns_multi_single_value_shuffle(spark):
+def test_value_ranks_multi_single_value_shuffle(spark, monkeypatch, value_prefix_routes):
     """The multi-column rank kernel melts N columns through ONE distinct
-    value table: exactly one RangePartitioning exchange in the whole
-    rank plan (plus the hash exchanges for groupBy/window/join-back)."""
-    from explorer_spark.operators.ordered import rank_columns_multi
+    value table: with both columns forced onto the range kernel, exactly
+    one range-partition pass serves the whole rank plan (plus the hash
+    exchanges for groupBy/window/join-back)."""
+    from explorer_spark.operators import ordered as ordk
 
+    monkeypatch.setattr(ordk, "SMALL_VALS_MAX", 0)
+    monkeypatch.setattr(ordk, "BC_BYTES_MAX", 0)
     sdf = spark.range(1000).selectExpr(
         "CAST(id % 37 AS DOUBLE) AS a", "CAST(id % 11 AS DOUBLE) AS b"
     )
-    out = rank_columns_multi(sdf, {"a": "ra", "b": "rb"}, method="average")
+    out = ordk.value_ranks(sdf, {"a": {"ra": "average"}, "b": {"rb": "average"}})
+    assert value_prefix_routes == [False]
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the single range shuffle sits BEHIND the checkpoint boundary: both
     # per-column join-backs must scan the SAME pinned value table (two
     # ExistingRDD scans of one RDD), and nothing may go cartesian
     assert "CartesianProduct" not in plan
     assert plan.count("Scan ExistingRDD") == 2, plan[:2000]
+    assert "RangePartitioning" not in plan
 
 
 def test_partitioned_write_prunes_partitions(spark, tmp_path):
