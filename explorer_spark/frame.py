@@ -3313,6 +3313,12 @@ class DataFrame:
         sdf = self.lazy_sdf()
         numeric = [f.name for f in sdf.schema.fields if isinstance(f.dataType, T.NumericType)]
         cols = [c for c in (self._resolve(selector) if selector else numeric) if c in numeric]
+        schema = T.StructType(
+            [T.StructField("names", T.StringType())] + [T.StructField(c, T.DoubleType()) for c in cols]
+        )
+        if not cols:
+            # no numeric column: the empty matrix, before any kernel runs
+            return DataFrame(sdf.sparkSession.createDataFrame([], schema), has_order=False)
         if method == "spearman":
             # tie-corrected average ranks (what Polars/pandas compute), via
             # ONE multi-column distributed rank kernel — no single-partition
@@ -3336,9 +3342,6 @@ class DataFrame:
             dict({"names": a}, **{b: stats[f"{a}||{b}"] for b in cols})
             for a in cols
         ]
-        schema = T.StructType(
-            [T.StructField("names", T.StringType())] + [T.StructField(c, T.DoubleType()) for c in cols]
-        )
         return DataFrame(spark.createDataFrame(data, schema), has_order=False)
 
     # ------------------------------------------------------------------

@@ -529,7 +529,8 @@ def neardup_components(pairs: SDF, id_a: str = "id_a", id_b: str = "id_b", max_i
     recompute the whole chain.
 
     Returns (vertex, component) for every vertex appearing in ``pairs``,
-    component = min vertex id of the cluster.
+    component = min vertex id of the cluster. Raises RuntimeError when
+    the iterative kernel has not converged after ``max_iter`` rounds.
     """
     edges = pairs.select(F.col(id_a).alias("__src__"), F.col(id_b).alias("__dst__"))
     edges = edges.unionByName(
@@ -605,6 +606,12 @@ def neardup_components(pairs: SDF, id_a: str = "id_a", id_b: str = "id_b", max_i
         labels = new_labels
         if changed == 0:
             break
+    else:
+        # the labels of an unconverged round are partial components
+        raise RuntimeError(
+            f"neardup_components: label propagation did not converge in max_iter={max_iter} rounds "
+            "(a component's diameter exceeds it); raise max_iter"
+        )
     return labels.select(F.col("__src__").alias("vertex"), F.col("__lbl__").alias("component"))
 
 

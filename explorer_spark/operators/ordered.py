@@ -20,9 +20,10 @@ same semantics with bounded parallel stages:
 2. **Index buckets** (`idx div B`): sequential logic (cumulative, fill,
    lag/lead frames) runs in per-bucket windows — a hash exchange on the
    bucket id, uniform by construction, skew-proof.
-3. **Cross-bucket combination**: unbounded ops (cumulative, fill)
-   collect the tiny per-bucket summary (ceil(n / B) rows) and join the
-   driver-computed prefix back as a literal broadcast; bounded ops
+3. **Cross-bucket combination**: unbounded ops (cumulative, fill, EWM)
+   collect the tiny per-bucket summary (ceil(n / B) rows) and attach
+   the driver-computed prefix back (`_attach`: constant arrays, or a
+   literal broadcast past ARRAY_LOOKUP_MAX keys); bounded ops
    (shift, peaks, rolling) duplicate the <= k boundary rows into the
    neighbour bucket and drop them after (`with_boundary_context`).
 4. **Value rank**: one distinct-value kernel (`value_ranks`). Any
@@ -138,18 +139,38 @@ def _rank_small_ok(n_distinct: int, est_bytes: int | None, approx: bool = False)
 SMALL_INDEX_MAX = 1 << 17
 
 
-def _array_lookup(key: Column, values: list, dtype: T.DataType) -> Column:
-    """``values[key]`` as a constant-array projection — the scalable
-    replacement for joining a tiny driver-built lookup table: no extra
-    DataFrame, no broadcast exchange, pure codegen.  ``key`` must be a
-    dense 0-based id (partition or bucket number)."""
-    arr = F.array(*[F.lit(v).cast(dtype) for v in values])
-    return F.get(arr, key.cast("int"))
+def _attach(sdf: SDF, keys: list[str], rows: dict, fields: list[T.StructField]) -> SDF:
+    """Attach driver-computed ``fields`` to every row of ``sdf`` by the
+    value of its ``keys`` columns. ``rows`` maps a key (a tuple when
+    there are several key columns) to one value tuple in ``fields``
+    order; a key absent from ``rows`` reads null.
 
-
-def _dense(rows: dict, n: int, default=None) -> list:
-    """Spread a {id: value} dict over the dense id range [0, n)."""
-    return [rows.get(i, default) for i in range(n)]
+    One key column is a dense 0-based id (partition, bucket or slot
+    number): up to ARRAY_LOOKUP_MAX ids each field becomes a
+    constant-array projection ``values[key]`` — no extra DataFrame, no
+    broadcast exchange, pure codegen. Past that, or with several key
+    columns (a grouped kernel's group values + bucket), the rows become
+    a literal broadcast table (:func:`_lookup_df`) matched on null-safe
+    keys: a null group key is a real group."""
+    if len(keys) == 1 and max(rows, default=-1) < ARRAY_LOOKUP_MAX:
+        ids = range(1 + max(rows, default=-1))
+        key = F.col(keys[0]).cast("int")
+        return sdf.withColumns(
+            {
+                f.name: F.get(F.array(*[F.lit(rows[i][j] if i in rows else None).cast(f.dataType) for i in ids]), key)
+                for j, f in enumerate(fields)
+            }
+        )
+    tmp = [f"__key{i}__" for i in range(len(keys))]
+    lut = _lookup_df(
+        sdf.sparkSession,
+        [(k if len(keys) > 1 else (k,)) + tuple(v) for k, v in rows.items()],
+        [T.StructField(t, sdf.schema[k].dataType) for t, k in zip(tmp, keys)] + fields,
+    )
+    cond = F.col(keys[0]).eqNullSafe(lut[tmp[0]])
+    for k, t in zip(keys[1:], tmp[1:]):
+        cond = cond & F.col(k).eqNullSafe(lut[t])
+    return sdf.join(F.broadcast(lut), cond, "left").drop(*tmp)
 
 
 def _prefix_scan(vals: list, kind: str, reverse: bool = False) -> list:
@@ -241,36 +262,19 @@ def with_global_index(
         F.count(F.lit(1)).alias("__cnt__"), F.min("__mono__").alias("__mn__")
     ).collect()
     stats.sort(key=lambda r: r["__pid__"])
-    offs, mns, off = {}, {}, 0
+    offs, off = {}, 0
     for r in stats:
-        offs[r["__pid__"]] = off
-        mns[r["__pid__"]] = r["__mn__"]
+        offs[r["__pid__"]] = (off, r["__mn__"])
         off += r["__cnt__"]
-    nparts = (max(offs) + 1) if offs else 0
-    pid = F.col("__pid__")
-    if nparts <= ARRAY_LOOKUP_MAX:
-        base = _array_lookup(pid, _dense(offs, nparts, 0), T.LongType()) - _array_lookup(
-            pid, _dense(mns, nparts, 0), T.LongType()
-        )
-        s = s.withColumn(name, (base + F.col("__mono__")).cast("long"))
-    else:
-        lookup = _lookup_df(
-            sdf.sparkSession,
-            [(p, offs[p], mns[p]) for p in offs],
-            [
-                T.StructField("__pid__", T.IntegerType()),
-                T.StructField("__off__", T.LongType()),
-                T.StructField("__mn__", T.LongType()),
-            ],
-        )
-        s = s.join(F.broadcast(lookup), "__pid__", "left")
-        s = s.withColumn(name, (F.col("__off__") + (F.col("__mono__") - F.col("__mn__"))).cast("long"))
-        s = s.drop("__off__", "__mn__")
+    s = _attach(
+        s, ["__pid__"], offs, [T.StructField("__off__", T.LongType()), T.StructField("__mn__", T.LongType())]
+    )
+    s = s.withColumn(name, (F.col("__off__") + (F.col("__mono__") - F.col("__mn__"))).cast("long"))
     if total_col is not None:
         s = s.withColumn(total_col, F.lit(off).cast("long"))
     if stats_out is not None:
         stats_out["n"] = off
-    return s.drop("__pid__", "__mono__")
+    return s.drop("__pid__", "__mono__", "__off__", "__mn__")
 
 
 # ---------------------------------------------------------------------------
@@ -337,18 +341,12 @@ def cumulative(
     rows = per.collect()
     rows.sort(key=lambda r: r[BUCKET])
     pre = _prefix_scan([r["__tot__"] for r in rows], kind, reverse=reverse)
-    by_bkt = {r[BUCKET]: p for r, p in zip(rows, pre)}
-    nb = (max(by_bkt) + 1) if by_bkt else 0
-    s = s.withColumn("__loc__", local)
-    if nb <= ARRAY_LOOKUP_MAX:
-        s = s.withColumn("__pre__", _array_lookup(F.col(BUCKET), _dense(by_bkt, nb), tot_type))
-    else:
-        lookup = _lookup_df(
-            sdf.sparkSession,
-            list(by_bkt.items()),
-            [T.StructField(BUCKET, T.LongType()), T.StructField("__pre__", tot_type)],
-        )
-        s = s.join(F.broadcast(lookup), BUCKET, "left")
+    s = _attach(
+        s.withColumn("__loc__", local),
+        [BUCKET],
+        {r[BUCKET]: (p,) for r, p in zip(rows, pre)},
+        [T.StructField("__pre__", tot_type)],
+    )
     combined = _CUM_COMBINE[kind](F.col("__loc__"), F.col("__pre__"))
     if kind == "product":
         # Spark's PRODUCT always emits double; integer series keep their
@@ -387,23 +385,12 @@ def fill_missing(
     lv_type = per.schema["__lv__"].dataType
     rows = per.collect()
     rows.sort(key=lambda r: r[BUCKET], reverse=backward)
-    carries, running = [], None
+    carries, running = {}, None
     for r in rows:
-        carries.append(running)
+        carries[r[BUCKET]] = (running,)
         if r["__lv__"] is not None:
             running = r["__lv__"]
-    by_bkt = {r[BUCKET]: c for r, c in zip(rows, carries)}
-    nb = (max(by_bkt) + 1) if by_bkt else 0
-    s = s.withColumn("__loc__", local)
-    if nb <= ARRAY_LOOKUP_MAX:
-        s = s.withColumn("__pv__", _array_lookup(F.col(BUCKET), _dense(by_bkt, nb), lv_type))
-    else:
-        lookup = _lookup_df(
-            sdf.sparkSession,
-            list(by_bkt.items()),
-            [T.StructField(BUCKET, T.LongType()), T.StructField("__pv__", lv_type)],
-        )
-        s = s.join(F.broadcast(lookup), BUCKET, "left")
+    s = _attach(s.withColumn("__loc__", local), [BUCKET], carries, [T.StructField("__pv__", lv_type)])
     s = s.withColumn(out_col, F.coalesce(F.col("__loc__"), F.col("__pv__")))
     return s.drop(BUCKET, "__loc__", "__pv__")
 
@@ -480,8 +467,7 @@ def _value_prefix(vals: SDF, key: Column, small: bool) -> SDF:
     foldable and WindowExec stays keyed even for one column. Otherwise
     the distributed kernel: range-partition on ``(cid, key)``, pin the
     nondeterministic ids, one stats job, per-(partition, column) offsets
-    accumulated on the driver and re-emitted as a constant-array
-    projection (a broadcast lookup past ARRAY_LOOKUP_MAX slots)."""
+    accumulated on the driver and attached back by :func:`_attach`."""
     if small:
         w = W.partitionBy("__cid__").orderBy(key)
         return vals.withColumn(
@@ -502,32 +488,15 @@ def _value_prefix(vals: SDF, key: Column, small: bool) -> SDF:
     stats.sort(key=lambda r: (r["__cid__"], r["__vpid__"]))
     offs: dict = {}  # slot -> (dense offset, min mono id, row-count offset)
     run: dict = {}
-    nparts = 0
     for r in stats:
         c, p = r["__cid__"], r["__vpid__"]
         d0, c0 = run.get(c, (0, 0))
         offs[p * nc + c] = (d0, r["__mn__"], c0)
         run[c] = (d0 + r["__n__"], c0 + r["__t__"])
-        nparts = max(nparts, p + 1)
-    nslots = nparts * nc
-    slot = F.col("__vpid__") * nc + F.col("__cid__")
     w = W.partitionBy("__vpid__", "__cid__").orderBy("__mono__").rowsBetween(W.unboundedPreceding, 0)
-    v = v.withColumn("__lc__", F.sum("__c__").over(w))
+    v = v.withColumns({"__lc__": F.sum("__c__").over(w), "__slot__": F.col("__vpid__") * nc + F.col("__cid__")})
     names = ("__doff__", "__vmn__", "__coff__")
-    if nslots <= ARRAY_LOOKUP_MAX:
-        v = v.withColumns(
-            {
-                name: _array_lookup(slot, _dense({s: o[j] for s, o in offs.items()}, nslots, 0), T.LongType())
-                for j, name in enumerate(names)
-            }
-        )
-    else:
-        lookup = _lookup_df(
-            vals.sparkSession,
-            [(s, *o) for s, o in offs.items()],
-            [T.StructField("__slot__", T.LongType())] + [T.StructField(n, T.LongType()) for n in names],
-        )
-        v = v.withColumn("__slot__", slot).join(F.broadcast(lookup), "__slot__", "left")
+    v = _attach(v, ["__slot__"], offs, [T.StructField(n, T.LongType()) for n in names])
     v = v.withColumns(
         {
             "__lc__": F.col("__coff__") + F.col("__lc__"),
@@ -670,22 +639,49 @@ def global_rank(
 
 
 # ---------------------------------------------------------------------------
-# global EWM: bucket-parallel prefix composition
+# global EWM: one affine-state scan, composed across index buckets
 # ---------------------------------------------------------------------------
 #
-# EWM accumulators are first-order linear recurrences y_t = c*y_{t-1} + w_t
-# (c = 1-alpha for num/den, (1-alpha)^2 for the squared-weight terms), so
-# they compose across index buckets: a bucket's contribution to any later
-# row is its end-state scaled by c^distance.  Stages:
-#   1. per-bucket pandas kernel -> per-row LOCAL accumulators + end states
-#      (uniform hash exchange on the bucket id);
-#   2. bucket end states (ceil(n/B) rows, bounded) combine sequentially on
-#      the DRIVER -> per-bucket incoming carries, re-emitted as a literal
-#      broadcast lookup;
-#   3. broadcast-join carries back; per-row result is local + c^(i+1)*carry
-#      (c^distance underflows to 0 gracefully -- no overflow anywhere).
-# pandas semantics are matched exactly (adjust True/False, ignore_na=False
-# absolute positions, NaN==missing, bias=False variance).
+# Every adjust/ignore_nils family of pandas' ewm (NaN == missing,
+# bias=False variance) is one first-order recurrence over four channels:
+# the sum of weights SW, the weighted sum SWX, the weighted sum of
+# squares SWX2 and the sum of squared weights SW2. A valid x that comes
+# g positions after the previous valid one steps the state AFFINELY,
+# with multipliers that do not depend on the values (c = 1 - alpha):
+#
+#   SW'   = m*SW    + u          adjust=True:  m = c^g,         u = 1
+#   SWX'  = m*SWX   + u*x        adjust=False: m = c^g/(c^g+a), u = a/(c^g+a)
+#   SWX2' = m*SWX2  + u*x^2
+#   SW2'  = m^2*SW2 + u^2
+#
+# The first valid value starts the state at (1, x, x^2, 1), which is the
+# same step with c^g = 0. g is 1 under ignore_nils (the compacted valid
+# sequence). adjust=True without ignore_nils decays every row by c
+# instead: a held state shrinks alike in every channel, and the outputs
+# are ratios, so they are unchanged:
+#
+#   mean = SWX/SW,  var = max(SWX2/SW - mean^2, 0) * SW^2/(SW^2 - SW2)
+#
+# Affine maps compose, so the scan runs bucket-parallel (a bucketed
+# prefix scan):
+#   1. one pandas pass per index bucket (a uniform hash exchange on the
+#      bucket id) emits per row the multiplier A (the product of the m;
+#      SW2 takes A^2) and the zero-seeded run B. Where a bucket cannot
+#      tell whether a valid value came before it (adjust=False under
+#      ignore_nils) it also emits the fresh run U, seeded by the
+#      bucket's first valid value;
+#   2. the bucket end states compose sequentially on the DRIVER
+#      (ceil(n/B) rows, plus one per group boundary when grouped) into
+#      each bucket's incoming carry, attached back by :func:`_attach`;
+#   3. a row's state is A*carry + B, or U (B where there is no U) when no
+#      valid value came before its bucket.
+# Where m is constant the pass scans vectorized (`_geo_scan`). The one
+# family whose m depends on the gap (adjust=False without ignore_nils)
+# reads each bucket's previous valid index from a pre-pass and loops.
+# c^g underflows to exactly 0.0 for huge gaps in both engines: m=0, u=1
+# is then an exact state reset, same as pandas.
+
+_EWM_CH = ("sw", "swx", "swx2", "sw2")
 
 
 def _geo_scan(x, c):
@@ -714,6 +710,53 @@ def _geo_scan(x, c):
     return out
 
 
+def _ewm_scan(x, idx, a: float, adjust: bool, ignore_nils: bool, nch: int, prev: int):
+    """One EWM family over one bucket's rows in index order: ``x`` the
+    values (NaN where missing), ``idx`` their indexes, ``nch`` the
+    channels kept (2 for a mean, 4 with the squared ones), ``prev`` the
+    index of the last valid value before the bucket (-1: none; read only
+    by the gap-dependent family). Returns ``(A, B, U)``: the per-row
+    multiplier, then the zero-seeded and the fresh run as one array per
+    channel; U is None where it equals B."""
+    import numpy as np
+
+    c = 1.0 - a
+    valid = ~np.isnan(x)
+    ratios = (c, c, c, c * c)
+
+    def terms(w, xv):
+        return (w, w * xv, w * xv * xv, w * w)[:nch]
+
+    if ignore_nils:
+        k = np.cumsum(valid)
+        xv = x[valid]
+
+        def run(first):
+            w = np.full(len(xv), 1.0 if adjust else a)
+            w[:1] = first
+            return [np.concatenate([[0.0], _geo_scan(t, r)])[k] for t, r in zip(terms(w, xv), ratios)]
+
+        return c**k, run(1.0 if adjust else a), None if adjust else run(1.0)
+    if adjust:
+        B = [_geo_scan(t, r) for t, r in zip(terms(valid.astype("float64"), np.where(valid, x, 0.0)), ratios)]
+        return c ** np.arange(1, len(x) + 1, dtype="float64"), B, None
+    A, B = np.ones(len(x)), [np.zeros(len(x)) for _ in range(nch)]
+    mult, st, last = 1.0, [0.0] * 4, prev
+    vpos = np.flatnonzero(valid)
+    for j, end in zip(vpos, [*vpos[1:], len(x)]):
+        i, xj = int(idx[j]), float(x[j])
+        cg = c ** (i - last) if last >= 0 else 0.0
+        m, u = cg / (cg + a), a / (cg + a)
+        mult *= m
+        st = [m * st[0] + u, m * st[1] + u * xj, m * st[2] + u * xj * xj, m * m * st[3] + u * u]
+        # the state holds from this valid row to the next one
+        A[j:end] = mult
+        for ch in range(nch):
+            B[ch][j:end] = st[ch]
+        last = i
+    return A, B, None
+
+
 def ewm_global(
     sdf: SDF,
     idx_col: str,
@@ -721,609 +764,139 @@ def ewm_global(
     n_hint: int | None = None,
     group_cols: list[str] | None = None,
 ) -> SDF:
-    """Distributed ungrouped EWM over global index order.
-
-    ``group_cols``: per-GROUP variant (the giant-group path of grouped
-    ewm, rolling.ewm_columns): ``idx_col`` must then be a contiguous
-    0-based index WITHIN each group (each group occupying its own 0..n_g
-    range), local scans key on (group, bucket), and the driver carry
-    combine resets its running state at each group boundary. The caller
-    guarantees the subset routed here holds only groups LARGER than the
-    giant-group gate, so the (group, bucket) carry rows stay bounded by
-    n/bucket_width + n/gate. The ignore_nils=False + adjust=False corner
-    routes through ewm_gapped's grouped face (same keying and reset
-    discipline).
+    """Distributed EWM over index order: every adjust/ignore_nils family
+    through the one affine-state scan above, in one local pass, one
+    driver combine and one carry attach.
 
     specs: out_name -> (kind, src_col, alpha, adjust[, ignore_nils]),
-    kind in {mean, variance, standard_deviation}.  ``ignore_nils=True``
+    kind in {mean, variance, standard_deviation}. ``ignore_nils=True``
     (the reference default, lib/explorer/series.ex:5325) skips nulls
-    entirely: the recursion runs over the compacted valid subsequence
-    (valid-rank positions), which keeps every adjust/variance combination
-    an exact linear accumulation.  ``ignore_nils=False`` matches pandas
-    ``ignore_na=False`` (weights decay by absolute position); its
-    adjust=False variant renormalizes after each valid value, which is
-    not a plain linear accumulation when the column has internal nulls —
-    ALL kinds in that corner (mean, variance, standard_deviation) route
-    to :func:`ewm_gapped`, the four-channel per-row affine-in-state
-    composition, which is pandas-exact and fully distributed — no
-    single-task fallback remains anywhere.
+    entirely; False matches pandas ``ignore_na=False`` (weights decay by
+    absolute position). Rows before the first valid value are nil; a
+    variance is 0.0 from the first valid value on (reference
+    ewm_variance doctest series.ex:5449; pandas' ddof NaN diverges).
 
-    adjust=False reweights the accumulated adjust=True channels in
-    closed form: the first valid value keeps weight c^d instead of
-    a*c^d, so num' = a*num + (1-a)*cw*x0, ssq' = a*ssq + (1-a)*cw*x0^2,
-    den' = a*den + (1-a)*cw, dn2' = a^2*dn2 + (1-a^2)*cw^2 with
-    cw = c^(distance from the first valid value).
-    """
+    ``group_cols``: the per-GROUP face (the giant-group path of grouped
+    ewm, rolling.ewm_columns): ``idx_col`` must then be a contiguous
+    0-based index WITHIN each group, every pass keys on (group, bucket),
+    and the driver combine resets its state at each group boundary. The
+    caller routes only groups larger than the giant-group gate here, so
+    the (group, bucket) carry rows stay bounded by n/bucket_width +
+    n/gate."""
     import pandas as pd
 
     gcols = list(group_cols or [])
+    keycols = gcols + [BUCKET]
     specs = {o: (t + (True,) if len(t) == 4 else t) for o, t in specs.items()}
+    # one family per (src, alpha, adjust, ignore_nils); the squared
+    # channels only where a variance or std asks for them
+    nch: dict = {}
+    for kind, src, a, adj, ign in specs.values():
+        fam = (src, float(a), bool(adj), bool(ign))
+        nch[fam] = max(nch.get(fam, 2), 2 if kind == "mean" else 4)
+    fams = sorted(nch)
+    has_u = [not adj and ign for (_s, _a, adj, ign) in fams]
+    gap_srcs = sorted({src for (src, _a, adj, ign) in fams if not adj and not ign})
 
-    # ignore_nils=False + adjust=False renormalizes per observation —
-    # not the absolute-position-decay channels below. ALL such specs
-    # (mean/var/std, nulls or not) route through the affine-channel
-    # gapped kernel, which is pandas-exact and fully distributed.
-    gapped = {
-        o: (k, src, a) for o, (k, src, a, adj, ign) in specs.items() if not ign and not adj
-    }
-    specs = {o: t for o, t in specs.items() if o not in gapped}
-    if gapped:
-        sdf = ewm_gapped(sdf, idx_col, gapped, n_hint=n_hint, group_cols=gcols or None)
-        if not specs:
-            return sdf
+    def names(i, part):
+        return [f"__e{i}{part}{ch}__" for ch in _EWM_CH[: nch[fams[i]]]]
 
-    # accumulator channels for EXACTLY the requested (src, alpha,
-    # ignore_nils) tuples — a src_keys x alphas cross product would build
-    # (and scan, shuffle, checkpoint, and agg) channels no spec asked
-    # for; ssq/dn2 only where that tuple has a variance/std request
-    from collections import defaultdict
+    def fresh(i):
+        return names(i, "U" if has_u[i] else "B")
 
-    sq_need: dict = defaultdict(bool)
-    for (k, src, a, _adj, ign) in specs.values():
-        sq_need[(src, a, ign)] |= k != "mean"
+    def ckey(r):
+        return tuple(r[k] for k in keycols) if gcols else r[BUCKET]
 
-    bw = bucket_size_for(n_hint)
-    s = sdf.withColumn(BUCKET, F.floor(F.col(idx_col) / F.lit(bw)))
+    def walk(rows):
+        """The rows group by group (a null key is a real group), buckets
+        ascending, each flagged True where its group starts."""
+        prev_g = object()
+        for r in sorted(rows, key=lambda r: tuple((r[g] is None, r[g]) for g in gcols) + (r[BUCKET],)):
+            g = tuple(r[c] for c in gcols)
+            yield r, g != prev_g
+            prev_g = g
 
-    # num/den at ratio c=(1-a); ssq shares ratio c, the squared-weight
-    # sum dn2 decays at c^2
-    all_chans = []
-    for (src, a, ign) in sorted(sq_need):
-        all_chans += [("num", src, a, ign, 1), ("den", src, a, ign, 1)]
-        if sq_need[(src, a, ign)]:
-            all_chans += [("ssq", src, a, ign, 1), ("dn2", src, a, ign, 2)]
+    s = sdf.withColumn(BUCKET, F.floor(F.col(idx_col) / F.lit(bucket_size_for(n_hint))))
+    prev_valid: dict = {}  # carry key -> last valid index before it, per gap src
+    if gap_srcs:
+        lv_aggs = [
+            F.max(F.when(F.col(src).isNotNull() & ~F.isnan(F.col(src).cast("double")), F.col(idx_col)))
+            for src in gap_srcs
+        ]
+        pre = s.groupBy(*keycols).agg(*[e.alias(f"__lv{i}__") for i, e in enumerate(lv_aggs)]).collect()
+        for r, first in walk(pre):
+            if first:
+                lv = [-1] * len(gap_srcs)
+            prev_valid[ckey(r)] = tuple(lv)
+            lv = [v if r[f"__lv{i}__"] is None else r[f"__lv{i}__"] for i, v in enumerate(lv)]
 
-    def cname(kind, src, a, ign):
-        return f"__{kind}_{src}_{str(a).replace('.', '_')}_{int(ign)}__"
-
-    def kname(src):
-        return f"__k_{src}__"
-
-    # per-src valid-rank columns, needed by every ignore_nils=True channel
-    k_srcs = sorted({src for (src, _a, ign) in sq_need if ign})
-
-    fields = list(sdf.schema.fields) + [T.StructField(BUCKET, T.LongType())]
-    local_schema = T.StructType(
-        fields
-        + [T.StructField(kname(src), T.LongType()) for src in k_srcs]
-        + [T.StructField(cname(k, s_, a, i), T.DoubleType()) for (k, s_, a, i, _p) in all_chans]
+    local_cols = []
+    for i in range(len(fams)):
+        local_cols += [f"__e{i}A__"] + names(i, "B") + (names(i, "U") if has_u[i] else [])
+    schema = T.StructType(
+        list(sdf.schema.fields)
+        + [T.StructField(BUCKET, T.LongType())]
+        + [T.StructField(n, T.DoubleType()) for n in local_cols]
     )
 
     def local_pass(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         pdf = pdf.sort_values(idx_col).reset_index(drop=True)
-        xs = {}
-        for src in sorted({src for (_k, src, _a, _i, _p) in all_chans}):
+        idx = pdf[idx_col].to_numpy(dtype="int64")
+        if gap_srcs:
+            # pandas reads a null group key as NaN; the driver's Rows as None
+            key = tuple(None if pd.isna(v) else v for v in (pdf[k].iloc[0] for k in keycols))
+            lv = prev_valid[key if gcols else key[0]]
+        for i, (src, a, adj, ign) in enumerate(fams):
             x = pdf[src].to_numpy(dtype="float64", na_value=np.nan)
-            xs[src] = (x, ~np.isnan(x))
-        for src in k_srcs:
-            pdf[kname(src)] = np.cumsum(xs[src][1]).astype("int64")
-        for (kind, src, a, ign, power) in all_chans:
-            c = (1.0 - a) ** power
-            x, valid = xs[src]
-            if ign:
-                xv = x[valid]
-                if kind == "num":
-                    w = xv
-                elif kind == "ssq":
-                    w = xv * xv
-                else:
-                    w = np.ones(len(xv))
-                scan = np.concatenate([[0.0], _geo_scan(w, c)])
-                pdf[cname(kind, src, a, ign)] = scan[np.cumsum(valid)]
-            else:
-                if kind == "num":
-                    w = np.where(valid, x, 0.0)
-                elif kind == "ssq":
-                    w = np.where(valid, x * x, 0.0)
-                else:
-                    w = valid.astype("float64")
-                pdf[cname(kind, src, a, ign)] = _geo_scan(w, c)
+            prev = lv[gap_srcs.index(src)] if not (adj or ign) else -1
+            A, B, U = _ewm_scan(x, idx, a, adj, ign, nch[fams[i]], prev)
+            pdf = pdf.assign(**{f"__e{i}A__": A}, **dict(zip(names(i, "B"), B)), **dict(zip(names(i, "U"), U or [])))
         return pdf
 
-    keycols = gcols + [BUCKET]
-    local = s.groupBy(*keycols).applyInPandas(local_pass, local_schema).localCheckpoint(eager=False)
-
-    # bucket end states -> incoming carries, combined on the driver
-    # (ceil(n/B) rows, bounded — same bound as the zipWithIndex stats
-    # job; grouped: + one row per group boundary, bounded by n/gate)
-    end_aggs = [F.max(F.col(idx_col)).alias("__last__")] + [
-        F.max_by(F.col(cname(k, s_, a, i)), F.col(idx_col)).alias(cname(k, s_, a, i))
-        for (k, s_, a, i, _p) in all_chans
-    ] + [F.max(F.col(kname(src))).alias(kname(src)) for src in k_srcs]
-    ends = local.groupBy(*keycols).agg(*end_aggs)
-    ends = ends.withColumn("__len__", F.col("__last__") % F.lit(bw) + 1).drop("__last__")
-    end_rows = ends.collect()
-
-    def _gkey(r):
-        # null group keys are real groups; sort them deterministically
-        return tuple((r[g] is None, r[g]) for g in gcols)
-
-    end_rows.sort(key=lambda r: (_gkey(r), r[BUCKET]))
-    carry_by_chan: dict = {cname(k, s_, a, i): {} for (k, s_, a, i, _p) in all_chans}
-    voff_by_src: dict = {src: {} for src in k_srcs}  # valid-rank offsets
-    running = {cname(k, s_, a, i): 0.0 for (k, s_, a, i, _p) in all_chans}
-    vrun = {src: 0 for src in k_srcs}
-    prev_g: object = None
-    for r in end_rows:
-        cur_g = tuple(r[g] for g in gcols)
-        if gcols and cur_g != prev_g:
-            # carry state never crosses a group boundary
-            running = {nm: 0.0 for nm in running}
-            vrun = {src: 0 for src in k_srcs}
-            prev_g = cur_g
-        rkey = cur_g + (r[BUCKET],) if gcols else r[BUCKET]
-        for (kind, src, a, ign, power) in all_chans:
-            c = (1.0 - a) ** power
-            nm = cname(kind, src, a, ign)
-            steps = int(r[kname(src)]) if ign else int(r["__len__"])
-            carry_by_chan[nm][rkey] = running[nm]
-            running[nm] = r[nm] + (c ** steps) * running[nm]
-        for src in k_srcs:
-            voff_by_src[src][rkey] = vrun[src]
-            vrun[src] += int(r[kname(src)])
-    nb = (max(end_rows, key=lambda r: r[BUCKET])[BUCKET] + 1) if end_rows else 0
-    extra = {("__carry_" + nm): (vals, T.DoubleType(), 0.0) for nm, vals in carry_by_chan.items()}
-    extra.update(
-        {f"__voff_{src}__": (vals, T.LongType(), 0) for src, vals in voff_by_src.items()}
-    )
-    if not gcols and nb <= ARRAY_LOOKUP_MAX:
-        j = local.withColumns(
-            {
-                nm: _array_lookup(F.col(BUCKET), _dense(vals, nb, dflt), dt)
-                for nm, (vals, dt, dflt) in extra.items()
-            }
-        )
-    else:
-        names = sorted(extra)
-        schema_by_name = {f.name: f.dataType for f in sdf.schema.fields}
-        gtmp = [f"__cg{i}__" for i in range(len(gcols))]
-        carry_fields = (
-            [T.StructField(t, schema_by_name[g]) for t, g in zip(gtmp, gcols)]
-            + [T.StructField("__cb__", T.LongType())]
-            + [T.StructField(nm, extra[nm][1]) for nm in names]
-        )
-        seen_keys = sorted(
-            {(_gkey(r), r[BUCKET]) for r in end_rows},
-        )
-        carry_rows = []
-        for gk, b in seen_keys:
-            gvals = tuple(v for (_isnull, v) in gk)
-            k = gvals + (b,) if gcols else b
-            carry_rows.append(
-                tuple(gvals) + (b,) + tuple(extra[nm][0].get(k, extra[nm][2]) for nm in names)
-            )
-        lut = F.broadcast(_lookup_df(sdf.sparkSession, carry_rows, carry_fields))
-        cond = F.col(BUCKET) == F.col("__cb__")
-        for t, g in zip(gtmp, gcols):
-            # eqNullSafe: a null group key is a real group
-            cond = cond & F.col(g).eqNullSafe(F.col(t))
-        j = local.join(lut, cond, "left").drop("__cb__", *gtmp)
-    abs_pos = (F.col(idx_col) % F.lit(bw) + 1).cast("double")  # i+1
-
-    def total(kind, src, a, ign, power):
-        c = float((1.0 - a) ** power)
-        carry = F.coalesce(F.col("__carry_" + cname(kind, src, a, ign)), F.lit(0.0))
-        pos = F.col(kname(src)).cast("double") if ign else abs_pos
-        return F.col(cname(kind, src, a, ign)) + F.pow(F.lit(c), pos) * carry
-
-    # first-valid scalars, needed once per adjust=False source — per
-    # GROUP when grouped (each group restarts its recursion)
-    fv_cols = []
-    for out_name, (kind, src, a, adjust, ign) in specs.items():
-        if adjust:
-            continue
-        x0, j0 = f"__x0_{out_name}__", f"__j0_{out_name}__"
-        valid_rows = sdf.where(
-            F.col(src).isNotNull() & ~F.isnan(F.col(src).cast("double"))
-        )
-        aggs = [
-            F.min_by(F.col(src), F.col(idx_col)).alias(x0),
-            F.min(F.col(idx_col)).alias(j0),
-        ]
-        if gcols:
-            gtmp2 = [f"__fg{i}_{out_name}__" for i in range(len(gcols))]
-            first = valid_rows.groupBy(
-                *[F.col(g).alias(t) for t, g in zip(gtmp2, gcols)]
-            ).agg(*aggs)
-            cond = F.lit(True)
-            for t, g in zip(gtmp2, gcols):
-                cond = cond & F.col(g).eqNullSafe(F.col(t))
-            j = j.join(F.broadcast(first), cond, "left").drop(*gtmp2)
-        else:
-            j = j.crossJoin(F.broadcast(valid_rows.agg(*aggs)))
-        fv_cols += [x0, j0]
-
-    out_cols = {}
-    for out_name, (kind, src, a, adjust, ign) in specs.items():
-        num, den = total("num", src, a, ign, 1), total("den", src, a, ign, 1)
-        cw = None
-        if not adjust:
-            # adjust=False gives the FIRST valid value weight 1 instead of
-            # alpha: num' = a*num + (1-a)*x0*c^d, same for den/ssq/dn2
-            x0, j0 = F.col(f"__x0_{out_name}__"), F.col(f"__j0_{out_name}__")
-            if ign:
-                # distance counted in VALID observations: global valid rank-1
-                gvr = F.col(f"__voff_{src}__") + F.col(kname(src))
-                dist = (gvr - 1).cast("double")
-                cw = F.when(gvr >= 1, F.pow(F.lit(1.0 - a), dist)).otherwise(F.lit(0.0))
+    local = s.groupBy(*keycols).applyInPandas(local_pass, schema).localCheckpoint(eager=False)
+    ends = local.groupBy(*keycols).agg(
+        *[F.max_by(F.col(n), F.col(idx_col)).alias(n) for n in local_cols]
+    ).collect()
+    carries: dict = {}
+    for r, first in walk(ends):
+        if first:
+            state = [None] * len(fams)  # the state never crosses a group boundary
+        carries[ckey(r)] = tuple(v for i, st in enumerate(state) for v in (st or [None] * nch[fams[i]]))
+        for i, st in enumerate(state):
+            if st is None:
+                run = [r[n] for n in fresh(i)]
+                if run[0]:  # the bucket holds the first valid value
+                    state[i] = run
             else:
-                dist = (F.col(idx_col) - j0).cast("double")
-                cw = F.when(
-                    j0.isNotNull() & (F.col(idx_col) >= j0), F.pow(F.lit(1.0 - a), dist)
-                ).otherwise(F.lit(0.0))
-            num = a * num + (1.0 - a) * cw * x0.cast("double")
-            den = a * den + (1.0 - a) * cw
-        mean = num / den
-        if kind == "mean":
-            expr = mean
-        else:
-            ssq, dn2 = total("ssq", src, a, ign, 1), total("dn2", src, a, ign, 2)
-            if not adjust:
-                x0d = F.col(f"__x0_{out_name}__").cast("double")
-                ssq = a * ssq + (1.0 - a) * cw * x0d * x0d
-                dn2 = (a * a) * dn2 + (1.0 - a * a) * cw * cw
-            var_b = ssq / den - mean * mean
-            corr = (den * den) / (den * den - dn2)
-            # one effective observation -> 0.0, not nil (reference
-            # ewm_variance doctest series.ex:5449 starts at 0.0; pandas'
-            # ddof NaN is the divergent one)
-            expr = F.when(den * den > dn2, F.greatest(var_b * corr, F.lit(0.0))).otherwise(F.lit(0.0))
+                A = r[f"__e{i}A__"]
+                state[i] = [(A * A if ch == 3 else A) * v + r[b] for ch, (v, b) in enumerate(zip(st, names(i, "B")))]
+    carry_cols = [n for i in range(len(fams)) for n in names(i, "C")]
+    j = _attach(local, keycols, carries, [T.StructField(n, T.DoubleType()) for n in carry_cols])
+
+    def channels(i):
+        A = F.col(f"__e{i}A__")
+        return [
+            F.when(F.col(c).isNotNull(), (A * A if ch == 3 else A) * F.col(c) + F.col(b)).otherwise(F.col(u))
+            for ch, (c, b, u) in enumerate(zip(names(i, "C"), names(i, "B"), fresh(i)))
+        ]
+
+    out = {}
+    for o, (kind, src, a, adj, ign) in specs.items():
+        sw, swx, *sq = channels(fams.index((src, float(a), bool(adj), bool(ign))))
+        expr = mean = swx / sw
+        if kind != "mean":
+            swx2, sw2 = sq
+            denom = sw * sw - sw2
+            # one effective observation -> 0.0, not nil
+            expr = F.when(denom > 0, F.greatest(swx2 / sw - mean * mean, F.lit(0.0)) * sw * sw / denom).otherwise(
+                F.lit(0.0)
+            )
             if kind == "standard_deviation":
                 expr = F.sqrt(expr)
-        out_cols[out_name] = F.when(den > 0, expr).otherwise(F.lit(None))
-
-    j = j.withColumns(out_cols)
-    drop = [cname(k, s_, a, i) for (k, s_, a, i, _p) in all_chans]
-    drop += ["__carry_" + cname(k, s_, a, i) for (k, s_, a, i, _p) in all_chans]
-    drop += [kname(src) for src in k_srcs] + [f"__voff_{src}__" for src in k_srcs]
-    drop += [BUCKET] + fv_cols
-    return j.drop(*drop)
-
-
-# ---------------------------------------------------------------------------
-# gapped EWM: adjust=False, ignore_nils=False over null-bearing data
-# ---------------------------------------------------------------------------
-#
-# pandas' recursion in this corner is NOT the absolute-position-decay
-# closed form (the old_wt reset after gaps breaks ratio cancellation).
-# But unrolling it per VALID observation shows the state is four scalar
-# channels, each AFFINE per step with data-independent multipliers:
-# after a gap of g positions, with s = c^g/(c^g + a), w = a/(c^g + a),
-#
-#   SW'   = s*SW    + w          (sum of weights)
-#   SWX'  = s*SWX   + w*x        (weighted sum)
-#   SWX2' = s*SWX2  + w*x^2      (weighted sum of squares)
-#   SW2'  = s^2*SW2 + w^2        (sum of squared weights)
-#
-# and mean = SWX/SW, var(bias=False) = max(SWX2/SW - mean^2, 0) *
-# SW^2/(SW^2 - SW2) — verified numerically equal to pandas
-# ewm(adjust=False, ignore_na=False) mean AND var on gapped data.
-# Affine composes across index buckets: the local pass extracts per-row
-# (A, B) coefficients (A = running product of s; B = zero-seeded run)
-# plus the fresh-start channel values U for buckets before any prior
-# valid observation; bucket end states compose sequentially on the
-# driver, and the per-row channels are A*carry + B (A^2 for SW2).
-# c^g underflows to exactly 0.0 for huge gaps in both engines — s=0,
-# w=1 is then an exact state reset, same as pandas.
-
-_EWM_CH = ("sw", "swx", "swx2", "sw2")
-
-
-def ewm_gapped(
-    sdf: SDF,
-    idx_col: str,
-    specs: dict,
-    n_hint: int | None = None,
-    group_cols: list[str] | None = None,
-) -> SDF:
-    """Distributed pandas-exact EWM for adjust=False, ignore_na=False
-    (with or without nulls). specs: out_name -> (kind, src_col, alpha),
-    kind in {mean, variance, standard_deviation}.
-
-    ``group_cols``: per-GROUP variant (the giant-group path, mirroring
-    ewm_global's grouped face): ``idx_col`` must be a contiguous 0-based
-    index WITHIN each group; the prev-valid pre-pass, the local scans,
-    and the driver carry combine all key on (group, bucket) and reset at
-    group boundaries. Callers route only gate-exceeding groups here, so
-    the driver-side (group, bucket) state stays bounded."""
-    import pandas as pd
-
-    gcols = list(group_cols or [])
-    s = sdf.withColumn(BUCKET, F.floor(F.col(idx_col) / F.lit(bucket_size_for(n_hint))))
-    fams = sorted({(src, alpha) for (_k, src, alpha) in specs.values()})
-    srcs = sorted({src for (src, _a) in fams})
-    keycols = gcols + [BUCKET]
-
-    def _gkey(r):
-        return tuple((r[g] is None, r[g]) for g in gcols)
-
-    def _ckey(r):
-        # composite carry key: group values + bucket (bucket alone when
-        # ungrouped, preserving the dense-array fast path)
-        return (tuple(r[g] for g in gcols) + (r[BUCKET],)) if gcols else r[BUCKET]
-
-    # pre-pass: per-(group,)bucket last valid idx per src -> prev-valid
-    # carry idx, reset at group boundaries
-    pre = s.groupBy(*keycols).agg(
-        *[
-            F.max(
-                F.when(F.col(src).isNotNull() & ~F.isnan(F.col(src).cast("double")), F.col(idx_col))
-            ).alias(f"__lv_{src}__")
-            for src in srcs
-        ]
-    ).collect()
-    pre.sort(key=lambda r: (_gkey(r), r[BUCKET]))
-    nb = (max(r[BUCKET] for r in pre) + 1) if pre else 0
-    prev_valid: dict = {src: {} for src in srcs}  # carry-key -> idx of last valid BEFORE it (or -1)
-    run_lv: dict = {src: -1 for src in srcs}
-    prev_g: object = None
-    for r in pre:
-        cur_g = tuple(r[g] for g in gcols)
-        if gcols and cur_g != prev_g:
-            run_lv = {src: -1 for src in srcs}
-            prev_g = cur_g
-        for src in srcs:
-            prev_valid[src][_ckey(r)] = run_lv[src]
-            if r[f"__lv_{src}__"] is not None:
-                run_lv[src] = int(r[f"__lv_{src}__"])
-
-    def fname(src, alpha):
-        return f"{src}_{str(alpha).replace('.', '_')}"
-
-
-    out_fields = list(sdf.schema.fields) + [T.StructField(BUCKET, T.LongType())]
-    for (src, alpha) in fams:
-        fn = fname(src, alpha)
-        out_fields.append(T.StructField(f"__A_{fn}__", T.DoubleType()))
-        for ch in _EWM_CH:
-            out_fields += [
-                T.StructField(f"__B{ch}_{fn}__", T.DoubleType()),
-                T.StructField(f"__U{ch}_{fn}__", T.DoubleType()),
-            ]
-    schema = T.StructType(out_fields)
-    if gcols:
-        pv = {src: dict(prev_valid[src]) for src in srcs}
-    else:
-        pv = {src: [prev_valid[src].get(b, -1) for b in range(nb)] for src in srcs}
-
-    def local(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values(idx_col).reset_index(drop=True)
-        b = int(pdf[BUCKET].iloc[0])
-        if gcols:
-            # composite carry key; normalize pandas NaN null keys to None
-            # so they hash like the driver-side Row values
-            gvals = tuple(
-                None if pd.isna(pdf[g].iloc[0]) else pdf[g].iloc[0] for g in gcols
-            )
-            ck = gvals + (b,)
-        idxs_all = pdf[idx_col].to_numpy(dtype="int64")
-        n = len(pdf)
-        for (src, alpha) in fams:
-            fn = fname(src, alpha)
-            a = float(alpha)
-            c = 1.0 - a
-            x = pdf[src].to_numpy(dtype="float64", na_value=np.nan)
-            valid = ~np.isnan(x)
-            vpos = np.nonzero(valid)[0]
-            A_rows = np.ones(n)
-            B_rows = {ch: np.zeros(n) for ch in _EWM_CH}
-            U_rows = {ch: np.full(n, np.nan) for ch in _EWM_CH}
-            if gcols:
-                lv = pv[src].get(ck, -1)
-            else:
-                lv = pv[src][b] if b < len(pv[src]) else -1
-            # carried run: state affine in the incoming channels
-            if lv >= 0:
-                A = 1.0
-                Bsw = Bswx = Bswx2 = Bsw2 = 0.0
-                prev = lv
-                k = 0
-                for j in vpos:
-                    i = int(idxs_all[j])
-                    xv = float(x[j])
-                    cg = c ** (i - prev)
-                    s_ = cg / (cg + a)
-                    w = a / (cg + a)
-                    A *= s_
-                    Bsw = s_ * Bsw + w
-                    Bswx = s_ * Bswx + w * xv
-                    Bswx2 = s_ * Bswx2 + w * xv * xv
-                    Bsw2 = s_ * s_ * Bsw2 + w * w
-                    # fill from this valid row to the next one (state holds)
-                    end = vpos[k + 1] if k + 1 < len(vpos) else n
-                    A_rows[j:end] = A
-                    B_rows["sw"][j:end] = Bsw
-                    B_rows["swx"][j:end] = Bswx
-                    B_rows["swx2"][j:end] = Bswx2
-                    B_rows["sw2"][j:end] = Bsw2
-                    prev = i
-                    k += 1
-            else:
-                # fresh start: channels seeded by the first valid row
-                SW = SWX = SWX2 = SW2 = float("nan")
-                prev = None
-                k = 0
-                for j in vpos:
-                    i = int(idxs_all[j])
-                    xv = float(x[j])
-                    if prev is None:
-                        SW, SWX, SWX2, SW2 = 1.0, xv, xv * xv, 1.0
-                    else:
-                        cg = c ** (i - prev)
-                        s_ = cg / (cg + a)
-                        w = a / (cg + a)
-                        SW = s_ * SW + w
-                        SWX = s_ * SWX + w * xv
-                        SWX2 = s_ * SWX2 + w * xv * xv
-                        SW2 = s_ * s_ * SW2 + w * w
-                    end = vpos[k + 1] if k + 1 < len(vpos) else n
-                    U_rows["sw"][j:end] = SW
-                    U_rows["swx"][j:end] = SWX
-                    U_rows["swx2"][j:end] = SWX2
-                    U_rows["sw2"][j:end] = SW2
-                    prev = i
-                    k += 1
-            pdf[f"__A_{fn}__"] = A_rows
-            for ch in _EWM_CH:
-                pdf[f"__B{ch}_{fn}__"] = B_rows[ch]
-                pdf[f"__U{ch}_{fn}__"] = U_rows[ch]
-        return pdf
-
-    local_df = s.groupBy(*keycols).applyInPandas(local, schema).localCheckpoint(eager=False)
-
-    end_cols = []
-    for (src, alpha) in fams:
-        fn = fname(src, alpha)
-        for ch in ["A"] + [f"B{c_}" for c_ in _EWM_CH] + [f"U{c_}" for c_ in _EWM_CH]:
-            end_cols.append(
-                F.max_by(F.col(f"__{ch}_{fn}__"), F.col(idx_col)).alias(f"__{ch}_{fn}__")
-            )
-    ends = local_df.groupBy(*keycols).agg(*end_cols).collect()
-    ends.sort(key=lambda r: (_gkey(r), r[BUCKET]))
-    carries: dict = {fam: {ch: {} for ch in _EWM_CH} for fam in fams}
-    state: dict = {fam: None for fam in fams}
-    prev_g2: object = None
-    for r in ends:
-        cur_g = tuple(r[g] for g in gcols)
-        if gcols and cur_g != prev_g2:
-            # carried EWM state never crosses a group boundary
-            state = {fam: None for fam in fams}
-            prev_g2 = cur_g
-        for fam in fams:
-            fn = fname(*fam)
-            for ch in _EWM_CH:
-                carries[fam][ch][_ckey(r)] = None if state[fam] is None else state[fam][ch]
-            if state[fam] is None:
-                u = r[f"__Usw_{fn}__"]
-                if u is not None and u == u:  # bucket contains the first valid
-                    state[fam] = {ch: float(r[f"__U{ch}_{fn}__"]) for ch in _EWM_CH}
-            else:
-                A = float(r[f"__A_{fn}__"])
-                new = {}
-                for ch in _EWM_CH:
-                    mult = A * A if ch == "sw2" else A
-                    new[ch] = mult * state[fam][ch] + float(r[f"__B{ch}_{fn}__"])
-                state[fam] = new
-    j = local_df
-    if gcols:
-        # composite (group, bucket) carry keys: one broadcast-joined
-        # literal table with null-safe group matching (a null group key
-        # is a real group)
-        from functools import reduce as _reduce
-
-        names = [(fam, ch) for fam in fams for ch in _EWM_CH]
-        schema_by_name = {f.name: f.dataType for f in sdf.schema.fields}
-        gtmp = [f"__gg{i}__" for i in range(len(gcols))]
-        carry_fields = (
-            [T.StructField(t, schema_by_name[g]) for t, g in zip(gtmp, gcols)]
-            + [T.StructField("__gb__", T.LongType())]
-            + [T.StructField(f"__C{ch}_{fname(*fam)}__", T.DoubleType()) for fam, ch in names]
-        )
-        all_keys = sorted(
-            {k for fam in fams for d in carries[fam].values() for k in d},
-            key=lambda k: tuple((v is None, v) for v in k[:-1]) + (k[-1],),
-        )
-        carry_rows = [
-            tuple(list(k[:-1]) + [k[-1]] + [carries[fam][ch].get(k) for fam, ch in names])
-            for k in all_keys
-        ]
-        cond = F.col(BUCKET) == F.col("__gb__")
-        for t, g in zip(gtmp, gcols):
-            cond = cond & F.col(g).eqNullSafe(F.col(t))
-        j = j.join(
-            F.broadcast(_lookup_df(sdf.sparkSession, carry_rows, carry_fields)),
-            cond,
-            "left",
-        ).drop("__gb__", *gtmp)
-
-        def carry_col(fam, ch):
-            return F.col(f"__C{ch}_{fname(*fam)}__")
-    elif nb <= ARRAY_LOOKUP_MAX:
-        def carry_col(fam, ch):
-            return _array_lookup(
-                F.col(BUCKET), _dense(carries[fam][ch], nb), T.DoubleType()
-            )
-    else:
-        # too many buckets to embed as plan-constant arrays (mirrors the
-        # sibling kernels): one broadcast-joined literal carry table; a
-        # bucket absent from the table (or a null cell) reads as null,
-        # which falls through to the U channel exactly like the dense path
-        names = [(fam, ch) for fam in fams for ch in _EWM_CH]
-        carry_fields = [T.StructField(BUCKET, T.LongType())] + [
-            T.StructField(f"__C{ch}_{fname(*fam)}__", T.DoubleType()) for fam, ch in names
-        ]
-        bkts = sorted({b for fam in fams for d in carries[fam].values() for b in d})
-        carry_rows = [
-            tuple([b] + [carries[fam][ch].get(b) for fam, ch in names]) for b in bkts
-        ]
-        j = j.join(
-            F.broadcast(_lookup_df(sdf.sparkSession, carry_rows, carry_fields)),
-            BUCKET,
-            "left",
-        )
-
-        def carry_col(fam, ch):
-            return F.col(f"__C{ch}_{fname(*fam)}__")
-
-    chan_exprs: dict = {}
-    for fam in fams:
-        fn = fname(*fam)
-        A = F.col(f"__A_{fn}__")
-        ce = {}
-        for ch in _EWM_CH:
-            carry = carry_col(fam, ch)
-            mult = A * A if ch == "sw2" else A
-            ce[ch] = F.when(
-                carry.isNotNull(), mult * carry + F.col(f"__B{ch}_{fn}__")
-            ).otherwise(F.col(f"__U{ch}_{fn}__"))
-        chan_exprs[fam] = ce
-    out_cols = {}
-    for out, (kind, src, alpha) in specs.items():
-        ce = chan_exprs[(src, alpha)]
-        mean = ce["swx"] / ce["sw"]
-        if kind == "mean":
-            out_cols[out] = mean
-        else:
-            var_b = F.greatest(ce["swx2"] / ce["sw"] - mean * mean, F.lit(0.0))
-            denom = ce["sw"] * ce["sw"] - ce["sw2"]
-            # single-observation windows are 0.0 (reference), not nil;
-            # zero observations stay nil
-            var = F.when(denom > 0, var_b * ce["sw"] * ce["sw"] / denom).otherwise(
-                F.when(ce["sw"] > 0, F.lit(0.0))
-            )
-            out_cols[out] = F.sqrt(var) if kind == "standard_deviation" else var
-    j = j.withColumns(out_cols)
-    drop = [BUCKET]
-    for (src, alpha) in fams:
-        fn = fname(src, alpha)
-        drop.append(f"__A_{fn}__")
-        for ch in _EWM_CH:
-            drop += [f"__B{ch}_{fn}__", f"__U{ch}_{fn}__", f"__C{ch}_{fn}__"]
-    return j.drop(*drop)
+        out[o] = F.when(sw > 0, expr)
+    return j.withColumns(out).drop(BUCKET, *local_cols, *carry_cols)
 
 
 # ---------------------------------------------------------------------------

@@ -13,10 +13,11 @@ Spark rendering:
   whole-stage-codegen, scales per group.
 - Weighted rolling -> closed-form sum of ``lag(col, k) * w[k]`` terms —
   still JVM-side; cost is O(window_size) expressions.
-- EWM -> inherently sequential; rendered as a grouped ``applyInPandas``
-  using pandas' ewm (Arrow-batched). At scale this parallelizes per
-  group; an ungrouped series runs in a single task (documented, same as
-  any global sequential scan).
+- EWM -> a sequential recurrence. Grouped: pandas' ewm in one grouped
+  ``applyInPandas`` per hash bucket of groups (Arrow-batched). Ungrouped
+  series, and groups above ``EWM_GROUP_GATE`` rows: the bucket-parallel
+  affine scan of ``operators/ordered.ewm_global``, so no task ever holds
+  a whole frame or a whole giant group.
 """
 
 from __future__ import annotations
@@ -265,11 +266,10 @@ def ewm_columns(frame, specs: dict[str, tuple], order_cols=None):
         # WHOLE in one executor's pandas frame at 100x. Probe the max
         # group size (one map-side-combined count agg); when any group
         # exceeds the gate, those groups route through the distributed
-        # affine prefix-composition kernel (ewm_global's grouped face:
-        # per-group contiguous index -> bucketed local scans -> bounded
-        # per-group carry combine; the ignore_nils=False + adjust=False
-        # corner routes through ewm_gapped's grouped face) while
-        # normal-size groups keep the pandas path.
+        # affine scan (ewm_global's grouped face, every adjust/ignore_nils
+        # family: per-group contiguous index -> bucketed local scans ->
+        # bounded per-group carry combine) while normal-size groups keep
+        # the pandas path.
         mx = None
         # limit-probe first: a frame with <= gate rows can't hold a
         # giant group, and the limit short-circuits without the
@@ -287,10 +287,8 @@ def ewm_columns(frame, specs: dict[str, tuple], order_cols=None):
         bucketed = sdf.withColumn("__ewmb__", F.pmod(F.xxhash64(*groups), F.lit(nb)))
         out = bucketed.groupBy("__ewmb__").applyInPandas(apply_bucket, out_schema)
         return DataFrame(out, groups=groups, has_order=True)
-    # ungrouped: bucket-parallel prefix composition — one uniform hash
-    # exchange, never a single whole-frame task (operators/ordered.py;
-    # the adjust=False + ignore_nils=False corner routes through the
-    # affine-channel gapped kernel there, also fully distributed)
+    # ungrouped: the bucket-parallel affine scan (operators/ordered.py)
+    # — one uniform hash exchange, never a single whole-frame task
     from .ordered import ewm_global
 
     idxed = frame._with_row_index("__eidx__")
@@ -303,10 +301,10 @@ def ewm_columns(frame, specs: dict[str, tuple], order_cols=None):
 def _ewm_grouped_giant(sdf, groups, specs, out_schema, apply_bucket, nb, gate):
     """Grouped ewm when at least one group exceeds the giant-group gate:
     normal-size groups keep the exact pandas bucket path; giant groups
-    route through the distributed affine prefix-composition kernel
-    (ewm_global with group_cols) so no single task ever holds a whole
-    group. Per-group contiguous indexes come from one range-partitioned
-    sort over (groups, order) + the per-partition-offset kernel — each
+    route through the distributed affine scan (ewm_global with
+    group_cols) so no single task ever holds a whole group. Per-group
+    contiguous indexes come from one range-partitioned sort over
+    (groups, order) + the per-partition-offset kernel — each
     giant group occupies a contiguous index range, so the (group,
     bucket) carry rows stay bounded by n/bucket_width + n/gate."""
     from ..frame import ORDER_COL, DataFrame

@@ -401,6 +401,21 @@ def test_neardup_components_iterative_path(spark, monkeypatch):
     assert want[4] == 1 and want[22] == 20 and want[11] == 10
 
 
+def test_neardup_components_raises_when_not_converged(spark, monkeypatch):
+    """The iterative kernel needs about one round per hop of a
+    component's diameter. A path longer than ``max_iter`` hops raises
+    instead of returning partial labels; enough rounds give one
+    component."""
+    from explorer_spark.operators import dedup as dd
+
+    monkeypatch.setattr(dd, "SMALL_EDGES_MAX", 0)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(7)], ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dd.neardup_components(pairs, max_iter=3)
+    got = {r.vertex: r.component for r in dd.neardup_components(pairs).collect()}
+    assert got == dict.fromkeys(range(8), 0)
+
+
 def test_stream_static_enrichment_matches_batch(spark, tmp_path):
     """Stream-static join: events stream enriched against a static dim
     produces exactly the batch join's rows."""

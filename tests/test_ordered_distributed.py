@@ -218,6 +218,18 @@ def test_spearman_average_ranks(spark):
     assert abs(got.loc[0, "b"] - want.loc["a", "b"]) < 1e-9
 
 
+def test_pairwise_without_numeric_columns_is_empty(spark):
+    """correlation (pearson and spearman) and covariance of a frame with
+    no numeric column return the empty matrix: a ``names`` column and
+    no rows, before any rank kernel or aggregate runs."""
+    import explorer_spark as ex
+
+    d = ex.from_columns({"s": ["x", "y"]}, spark=spark)
+    for out in (d.correlation(), d.correlation(method="spearman"), d.covariance()):
+        assert out.names == ["names"]
+        assert out.to_columns() == {"names": []}
+
+
 # ---------------------------------------------------------------------------
 # distributed ungrouped EWM (bucket-parallel prefix composition)
 # ---------------------------------------------------------------------------
@@ -239,8 +251,8 @@ def test_ewm_mean_matches_pandas(spark, pdf, alpha, adjust):
 @pytest.mark.parametrize("ign", [True, False])
 def test_ewm_mean_with_nulls_matches_pandas(spark, adjust, ign):
     """ignore_nils=True is the reference default (series.ex:5325); False
-    decays by absolute position. The False+adjust=False case goes through
-    the single-task fallback (nonlinear renormalization)."""
+    decays by absolute position. The False+adjust=False case renormalizes
+    after each gap: its multiplier depends on the gap length."""
     vals = [None, None, 1.0, None, 4.0, 2.0, None, 8.0, None, None, 3.0] * 5
     pdf2 = pd.DataFrame({"v": vals})
     df = from_pandas(pdf2, spark=spark)
@@ -492,35 +504,86 @@ def test_ewm_gapped_var_std_match_pandas(spark, monkeypatch):
 
 
 def test_ewm_gapped_carry_lookup_join_fallback(spark, monkeypatch):
-    """Past ARRAY_LOOKUP_MAX buckets the gapped kernel must switch from
-    plan-constant carry arrays to the broadcast lookup join — same values."""
+    """Past ARRAY_LOOKUP_MAX buckets the EWM carry attach switches from
+    plan-constant arrays to the broadcast lookup join. Every
+    adjust/ignore_nils family, ungrouped and in the giant-group face
+    (whose (group, bucket) keys always take the join; a null group key
+    is a real group), matches pandas there."""
     import numpy as np
     import pandas as pd
 
-    from explorer_spark.operators import ordered as ordk
-    from explorer_spark.sources import from_pandas
+    from explorer_spark.operators import rolling
 
     monkeypatch.setattr(ordk, "BUCKET_SIZE", 7)
     monkeypatch.setattr(ordk, "ARRAY_LOOKUP_MAX", 4)  # 60 rows / 7 = 9 buckets > 4
+    monkeypatch.setattr(rolling, "EWM_GROUP_GATE", 10)  # both groups are giant
+    lookups = []
+    inner = ordk._lookup_df
+    monkeypatch.setattr(ordk, "_lookup_df", lambda *a: lookups.append(a) or inner(*a))
     rng = np.random.default_rng(5)
     x = rng.normal(size=60)
     x[rng.choice(60, 12, replace=False)] = np.nan
     x[:3] = np.nan
-    pdf = pd.DataFrame({"x": x})
+    pdf = pd.DataFrame({"g": [None if i % 3 == 0 else "a" for i in range(60)], "x": x})
+    fams = [(adj, ign) for adj in (True, False) for ign in (True, False)]
+    specs = {}
+    for adj, ign in fams:
+        specs[f"m{adj:d}{ign:d}"] = ("mean", "x", 0.3, adj, ign)
+        specs[f"v{adj:d}{ign:d}"] = ("variance", "x", 0.3, adj, ign)
+
+    def want(part):
+        out = {}
+        seen = part["x"].notna().cumsum() >= 1
+        for adj, ign in fams:
+            ew = part["x"].ewm(alpha=0.3, adjust=adj, ignore_na=ign, min_periods=1)
+            out[f"m{adj:d}{ign:d}"] = ew.mean()
+            out[f"v{adj:d}{ign:d}"] = ew.var(bias=False).mask(lambda v: v.isna() & seen, 0.0)
+        return pd.DataFrame(out)
+
     d = from_pandas(pdf, spark=spark)
-    got = (
-        d.ewm(
-            m=("mean", "x", 0.3, False, False),
-            v=("variance", "x", 0.3, False, False),
-        )
-        .select(["m", "v"])
-        .to_pandas()
+    faces = {
+        "ungrouped": (d, want(pdf)),
+        "giant-group": (d.group_by("g"), pd.concat(want(p) for _, p in pdf.groupby("g", dropna=False))),
+    }
+    for face, (frame, expect) in faces.items():
+        del lookups[:]
+        got = frame.ewm(**specs).to_pandas()
+        assert any(f.name == "__e0Csw__" for _, _, fields in lookups for f in fields), face
+        for name in specs:
+            g = got[name].to_numpy("float64")
+            w = expect[name].sort_index().to_numpy("float64")
+            assert np.allclose(g, w, equal_nan=True, rtol=1e-10, atol=1e-12), (face, name)
+
+
+@pytest.mark.parametrize("kernel", ["with_global_index", "cumulative", "fill_missing", "value_ranks"])
+def test_attach_lookup_join_matches_array(spark, monkeypatch, value_prefix_routes, kernel):
+    """Every caller of the carry attach (ordered._attach) answers alike
+    on both sides of ARRAY_LOOKUP_MAX: plan-constant arrays by default,
+    the broadcast lookup table at 0."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(ordk, "SMALL_VALS_MAX", 0)  # value ranks: the range kernel
+    monkeypatch.setattr(ordk, "BC_BYTES_MAX", 0)
+    lookups = []
+    inner = ordk._lookup_df
+    monkeypatch.setattr(ordk, "_lookup_df", lambda *a: lookups.append(a) or inner(*a))
+    # null runs that open buckets 2, 5, ... (BUCKET_SIZE 7): fills carry across
+    src = spark.createDataFrame(
+        [(i, None if i % 11 < 4 else float((i * 37) % 23)) for i in range(100)], "i long, v double"
     )
-    ew = pdf["x"].ewm(alpha=0.3, adjust=False, ignore_na=False, min_periods=1)
-    seen = pdf["x"].notna().cumsum() >= 1
-    wv = ew.var(bias=False).mask(lambda s: s.isna() & seen, 0.0)
-    assert np.allclose(got["m"], ew.mean(), equal_nan=True, rtol=1e-10, atol=1e-12)
-    assert np.allclose(got["v"], wv, equal_nan=True, rtol=1e-10, atol=1e-12)
+    run = {
+        "with_global_index": lambda: ordk.with_global_index(src, [F.col("v").asc_nulls_last(), F.col("i").asc()], "gi"),
+        "cumulative": lambda: ordk.cumulative(src, "i", "v", "cs", "sum"),
+        "fill_missing": lambda: ordk.fill_missing(src, "i", "v", "fv"),
+        "value_ranks": lambda: ordk.value_ranks(src, {"v": {"r": "min", "d": "dense"}}),
+    }[kernel]
+    default = run().orderBy("i").collect()
+    assert not lookups
+    monkeypatch.setattr(ordk, "ARRAY_LOOKUP_MAX", 0)
+    assert run().orderBy("i").collect() == default
+    assert lookups
+    if kernel == "value_ranks":
+        assert value_prefix_routes == [False, False]
 
 
 def test_uniform_select_exact_ranks(spark, monkeypatch):

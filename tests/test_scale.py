@@ -569,8 +569,8 @@ def test_argsort_is_distributed(spark):
 
 def test_grouped_ewm_giant_group_bounded(spark, monkeypatch):
     """Grouped ewm above the giant-group gate (r7 verdict #4): groups
-    larger than the gate route through the distributed affine
-    prefix-composition kernel (ewm_global group_cols) — per-group
+    larger than the gate route through the distributed affine scan
+    (ewm_global group_cols), every adjust/ignore_nils family — per-group
     bucketed local scans with a bounded carry combine — instead of one
     whole-group pandas frame. One group holding ~all rows must (a)
     answer exactly like the pandas path and (b) plan with a FlatMapGroups
@@ -597,8 +597,9 @@ def test_grouped_ewm_giant_group_bounded(spark, monkeypatch):
                 m=("mean", "x", 0.3, True),
                 v=("variance", "x", 0.3, False),
                 sd=("standard_deviation", "x", 0.2, True),
-                # the gapped corner (adjust=False, ignore_nils=False)
-                # routes through ewm_gapped's grouped face
+                # absolute-position decay (adjust=True, ignore_nils=False)
+                av=("variance", "x", 0.4, True, False),
+                # the gap-dependent family (adjust=False, ignore_nils=False)
                 gm=("mean", "x", 0.3, False, False),
                 gv=("variance", "x", 0.3, False, False),
             )
@@ -610,7 +611,7 @@ def test_grouped_ewm_giant_group_bounded(spark, monkeypatch):
     gated = run()
     import math
 
-    for c in ("m", "v", "sd", "gm", "gv"):
+    for c in ("m", "v", "sd", "av", "gm", "gv"):
         for u, v in zip(base[c], gated[c]):
             if u is None and v is None:
                 continue
